@@ -1368,8 +1368,11 @@ def proxy_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     # join+aggregate+lag pipeline runs once.
     feats = monthly_features(spark, sf_dir).localCheckpoint(eager=True)
     w_mes = Window.partitionBy("mes")
+    # exact median in integer cents, then one explicit half-up rounding:
+    # rounding a median of doubles ties differently across engines
+    cents = F.round(F.col("faturamento") * 100).cast("bigint")
     med = feats.groupBy("n_name").agg(
-        F.round(F.median("faturamento"), 2).alias("mediana")
+        (F.floor(F.median(cents) + 0.5) / 100).alias("mediana")
     )
     fator = F.when(F.col("mediana") < 1_000_000, F.lit(1000)).otherwise(F.lit(1))
     return (
@@ -1408,7 +1411,9 @@ WITH monthly AS (
          LAG(faturamento) OVER (PARTITION BY n_name ORDER BY mes) AS lag_1
   FROM monthly
 ), med AS (
-  SELECT n_name, ROUND(median(faturamento), 2) AS mediana FROM monthly GROUP BY 1
+  SELECT n_name,
+         floor(median(CAST(round(faturamento * 100) AS BIGINT)) + 0.5) / 100 AS mediana
+  FROM monthly GROUP BY 1
 )
 SELECT f.n_name, f.mes, f.faturamento,
        ROUND(COALESCE(NULLIF(f.lag_1, 0.0),

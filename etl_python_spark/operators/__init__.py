@@ -2,8 +2,10 @@
 
 Each module exposes ``QUERIES: dict[str, (spark, sf_dir) -> DataFrame]``
 and ``ORACLES: dict[str, str]`` (DuckDB-runnable ANSI SQL with the same
-output column names).  ``all_queries()`` / ``all_oracles()`` merge them
-for the driver entry point.
+output column names).  ``all_queries()`` / ``all_oracles()`` merge them,
+in module order, for ``__spark_entry__.py``; ``tests/test_queries_smoke.py``
+holds every query to its oracle with the strict comparator of
+``tools/check_correctness.py``.
 """
 
 from __future__ import annotations
@@ -13,92 +15,10 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 
-# The external driver issues correctness verdicts for the FIRST 50
-# ``queries()`` entries only (observed in round 1: entries past the cap
-# got no verdict).  Order therefore encodes verification priority:
-# (a) queries changed this round — their previous verdict is stale;
-# (b) queries that have never received a driver verdict;
-# (c) a representative slice of round-1-green queries (unchanged, so
-#     their round-1 verdict remains valid evidence).
-# Names absent from this tuple keep module order after the block.
-VERIFY_PRIORITY = (
-    # Round-17 rotation (enforced by tests/test_rotation.py against
-    # tools/queries_at_base.json @ round-16 HEAD, tools/round_base.txt).
-    # Round-16 verdict item 2 ("changed-first" rule): most of round 16's
-    # RESTRUCTURED queries were edited AFTER the r16 window was
-    # committed, so the driver oracle has never seen their new forms —
-    # the two-phase NTILE/rank kernels (rfm_segments, spearman_corr,
-    # gini_concentration, customer_quartiles), the rewritten CC/pagerank
-    # /checkpoint paths (pagerank_copurchase, dedup_*, fuzzy_components,
-    # kmv_overlap), the salted top-K trio (top_customers_per_nation,
-    # mad_outliers, zipf_vocab_stats) and the one-exchange-per-iteration
-    # ANN/kmeans family.  This window leads with exactly that cohort,
-    # which is also round 17's optimization target list (checkpoint
-    # A/Bs, salt removal, scale-adaptive partition counts), then fills
-    # with the remaining r16 fan-out-sweep restructures and the headline
-    # workhorses.  Queries edited this round OUTSIDE the window carry
-    # check_correctness --record evidence at their HEAD fingerprints
-    # (tools/offwindow_verified.json, stale records pruned per r16
-    # ADVICE item 1).
-    "rfm_segments",
-    "spearman_corr",
-    "gini_concentration",
-    "customer_quartiles",
-    "pagerank_copurchase",
-    "dedup_pairs_incremental",
-    "dedup_pairs_on_delete",
-    "kmv_overlap",
-    "fuzzy_components",
-    "top_customers_per_nation",
-    "mad_outliers",
-    "zipf_vocab_stats",
-    "ann_ivf",
-    "dedup_components",
-    "dedup_exact",
-    "dedup_keep_best",
-    "dedup_keep_canonical",
-    "incremental_dedup",
-    "leakage_safe_split",
-    "semantic_dedup",
-    "ann_ivf_fitted",
-    "kmeans_embeddings",
-    "kmeans_assign",
-    "kmeans_silhouette",
-    "ivf_pq_search",
-    "ivf_pq_recall",
-    "ann_index_on_delete",
-    "ann_probe_recall",
-    "pq_codes",
-    "pq_distortion",
-    "market_basket",
-    "item_similarity",
-    "cluster_label_nmi",
-    "funnel_conversion",
-    "graph_triangles",
-    "tfidf_top_terms",
-    "lm_perplexity",
-    "heaps_vocab_growth",
-    "ml_proxy_features",
-    "cohort_ltv",
-    "chi_square_independence",
-    "theil_sen_trend",
-    "seasonal_decompose",
-    "pareto_abc",
-    "ngram_jaccard_pairs",
-    "minhash_lsh_pairs",
-    "simhash",
-    "pricing_summary",
-    "faturamento_rollup",
-    "sessionize",
-)
-
-
 def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    merged: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
+    out: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
     for mod in _modules():
-        merged.update(mod.QUERIES)
-    out = {n: merged[n] for n in VERIFY_PRIORITY if n in merged}
-    out.update({n: f for n, f in merged.items() if n not in out})
+        out.update(mod.QUERIES)
     return out
 
 

@@ -146,25 +146,6 @@ GROUP BY 1
 # N-gram Jaccard near-dup pairs via shingle inverted index
 # ---------------------------------------------------------------------------
 
-def _materialize(df: DataFrame, persist_mode: str) -> DataFrame:
-    """Compute-once sharing for a relation read by multiple branches:
-    ``"checkpoint"`` (bench default) eagerly localCheckpoints —
-    fastest, but executor-local and NOT fault-tolerant (a lost
-    executor fails the job, lineage is truncated); ``"persist"`` uses
-    ``persist(MEMORY_AND_DISK)`` — the production default on a
-    long-lived cluster: same sharing, and a lost block recomputes from
-    lineage instead of failing the job."""
-    if persist_mode == "checkpoint":
-        return df.localCheckpoint(eager=True)
-    if persist_mode == "persist":
-        from pyspark import StorageLevel
-
-        return df.persist(StorageLevel.MEMORY_AND_DISK)
-    raise ValueError(
-        f"persist_mode must be 'checkpoint' or 'persist', got {persist_mode!r}"
-    )
-
-
 def hashed_shingle_stream(docs: DataFrame) -> DataFrame:
     """(doc_id, n_sh, h): one row per distinct shingle occurrence,
     with the shingle 60-bit-hashed so everything downstream (df
@@ -179,21 +160,18 @@ def hashed_shingle_stream(docs: DataFrame) -> DataFrame:
     ).filter(F.col("shingle").isNotNull())
     return sh.select("doc_id", "n_sh", hash60(F.col("shingle")).alias("h"))
 
-def q_ngram_jaccard_pairs(
-    spark: SparkSession, sf_dir: str, persist_mode: str = "checkpoint"
-) -> DataFrame:
+def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Candidate pairs sharing ≥1 shingle, scored with exact Jaccard
     |A∩B| / (|A|+|B|−|A∩B|), threshold 0.2.
 
     Plan shape — the corpus is scanned and shingled exactly ONCE and
     no aggregation buffer ever holds a posting list:
     - :func:`hashed_shingle_stream` builds (doc_id, n_sh, h) in one
-      pass and is materialized (``persist_mode`` as in
-      :func:`_materialize`), so the df-count branch and the pair
-      branch read the same partitions instead of re-running the regex
-      shingler (round-6 fix: the unmaterialized shape re-executed the
-      shingle subtree on the count branch — the same double-pass
-      minhash shed in round 5);
+      pass and is eagerly localCheckpointed, so the df-count branch
+      and the pair branch read the same partitions instead of
+      re-running the regex shingler (round-6 fix: the unmaterialized
+      shape re-executed the shingle subtree on the count branch — the
+      same double-pass minhash shed in round 5);
     - document-frequency pass FIRST: ``groupBy(h).count()``
       (fixed-width partial aggregate), keep shingles with df in
       [2, MAX_DF], semi-join back.  The df cap drops degenerate hot
@@ -214,7 +192,7 @@ def q_ngram_jaccard_pairs(
     ``tests/test_plan_discipline.py`` pins the df-filter-before-pairs
     ordering and the single corpus pass."""
     docs = load_table(spark, sf_dir, "documents")
-    sh = _materialize(hashed_shingle_stream(docs), persist_mode)
+    sh = hashed_shingle_stream(docs).localCheckpoint(eager=True)
     kept = (
         sh.groupBy("h")
         .agg(F.count("*").alias("df"))
@@ -681,16 +659,16 @@ def materialize_dedup_endgame(
     # plan, unrolled so the intermediate state can be published too —
     # the incremental refresh consumes it instead of re-shingling)
     docs = load_table(spark, sf_dir, "documents")
-    sh = _materialize(hashed_shingle_stream(docs), "checkpoint")
+    sh = hashed_shingle_stream(docs).localCheckpoint(eager=True)
     df = sh.groupBy("h").agg(F.count("*").alias("df"))
-    df = _materialize(df, "checkpoint")
+    df = df.localCheckpoint(eager=True)
     postings = sh.join(df.filter(F.col("df") <= MAX_DF), "h", "left_semi")
     kept = sh.join(
         df.filter((F.col("df") >= 2) & (F.col("df") <= MAX_DF)),
         "h",
         "left_semi",
     )
-    counts = _materialize(_pair_counts(kept), "checkpoint")
+    counts = _pair_counts(kept).localCheckpoint(eager=True)
     pairs = _jaccard_from_counts(counts).select("doc_a", "doc_b")
     pairs = pairs.localCheckpoint(eager=True)  # CC reuses it below
 
@@ -871,12 +849,10 @@ def q_dedup_pairs_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingle crossed MAX_DF."""
     docs = load_table(spark, sf_dir, "documents")
     is_delta = (F.col("doc_id") % DOC_DELTA_MOD) == DOC_DELTA_REM
-    base_sh = _materialize(
-        hashed_shingle_stream(docs.filter(~is_delta)), "checkpoint"
-    )
-    delta_sh = _materialize(
-        hashed_shingle_stream(docs.filter(is_delta)), "checkpoint"
-    )
+    base_sh = hashed_shingle_stream(docs.filter(~is_delta))
+    base_sh = base_sh.localCheckpoint(eager=True)
+    delta_sh = hashed_shingle_stream(docs.filter(is_delta))
+    delta_sh = delta_sh.localCheckpoint(eager=True)
     # The two banked-state stand-ins each feed 2-3 joins inside
     # _incremental_pair_counts; materialized once, exactly like the
     # txn-published tables they model (refresh_dedup_endgame_
@@ -1028,7 +1004,7 @@ def q_dedup_pairs_on_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     See :func:`refresh_dedup_endgame_on_delete` for the txn form."""
     docs = load_table(spark, sf_dir, "documents")
     is_removed = (F.col("doc_id") % DOC_DEL_MOD) == DOC_DEL_REM
-    base_sh = _materialize(hashed_shingle_stream(docs), "checkpoint")
+    base_sh = hashed_shingle_stream(docs).localCheckpoint(eager=True)
     # base_df stands in for the txn-read df snapshot; it feeds TWO
     # executed consumers here (the kept-filter semi-join and the
     # cap-recross probe), so one checkpoint saves a corpus-shingle
@@ -1120,11 +1096,11 @@ def refresh_dedup_endgame_on_delete(
         "doc_id", "component_id"
     )
 
-    surv_sh = _materialize(hashed_shingle_stream(docs), "checkpoint")
+    surv_sh = hashed_shingle_stream(docs).localCheckpoint(eager=True)
     counts_new, changed, df_changed = _decremental_pair_counts(
         surv_sh, base_df, base_counts, removed_ids
     )
-    counts_new = _materialize(counts_new, "checkpoint")
+    counts_new = counts_new.localCheckpoint(eager=True)
     pairs_new = _jaccard_from_counts(counts_new).select("doc_a", "doc_b")
     pairs_new = pairs_new.localCheckpoint(eager=True)
     labels_new = _incremental_components(base_labels, base_pairs, pairs_new)
@@ -1311,12 +1287,12 @@ def refresh_dedup_endgame_incremental(
 
     docs = load_table(spark, sf_dir, "documents")
     new_docs = docs.join(sizes.select("doc_id"), "doc_id", "left_anti")
-    delta_sh = _materialize(hashed_shingle_stream(new_docs), "checkpoint")
+    delta_sh = hashed_shingle_stream(new_docs).localCheckpoint(eager=True)
 
     counts_new, counts_changed, df_changed = _incremental_pair_counts(
         postings, base_df, base_counts, delta_sh
     )
-    counts_new = _materialize(counts_new, "checkpoint")
+    counts_new = counts_new.localCheckpoint(eager=True)
     pairs_new = _jaccard_from_counts(counts_new).select("doc_a", "doc_b")
     pairs_new = pairs_new.localCheckpoint(eager=True)  # CC + diff reuse it
     labels_new = _incremental_components(base_labels, base_pairs, pairs_new)
@@ -1487,20 +1463,9 @@ def _sql_band_key(names) -> str:
     return expr
 
 
-def q_minhash_lsh_pairs(
-    spark: SparkSession, sf_dir: str, persist_mode: str = "checkpoint"
-) -> DataFrame:
+def q_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pairs via MinHash signatures + LSH banding, verified
     with exact Jaccard ≥ 0.2 over hashed shingle sets.
-
-    ``persist_mode`` picks how the shared per-doc relation is
-    materialized: ``"checkpoint"`` (default, the bench shape) uses an
-    eager ``localCheckpoint`` — fastest, but executor-local and NOT
-    fault-tolerant (a lost executor fails the job, lineage is
-    truncated); ``"persist"`` uses ``persist(MEMORY_AND_DISK)`` — the
-    production default on a long-lived cluster: same compute-once
-    sharing, and a lost block is recomputed from lineage instead of
-    failing the job.  Both return identical rows.
 
     k=32 universal-hash minhashes per doc — mh_i = min over shingles of
     (a_i·H + b_i) mod P, where H is the engine-agnostic 60-bit md5
@@ -1545,7 +1510,7 @@ def q_minhash_lsh_pairs(
     # Materialize once; both branches below read these partitions.
     # Per-invocation cost (each bench run recomputes — no cross-run
     # cache flattery); size is docs × (32 longs + hashed set).
-    per_doc = _materialize(per_doc, persist_mode)
+    per_doc = per_doc.localCheckpoint(eager=True)
 
     rows_per_band = MINHASH_K // LSH_BANDS
     band_cols = []

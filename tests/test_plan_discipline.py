@@ -104,38 +104,6 @@ def test_minhash_single_corpus_pass(spark):
     assert plan.count("Scan ExistingRDD") >= 1
 
 
-def test_minhash_persist_mode_identical(spark):
-    """The fault-tolerant persist(MEMORY_AND_DISK) mode must return
-    exactly the rows of the bench-default localCheckpoint mode, and an
-    unknown mode must fail fast."""
-    import pytest
-
-    from etl_python_spark.operators.dedup import q_minhash_lsh_pairs
-
-    chk = q_minhash_lsh_pairs(spark, SF_SMOKE, persist_mode="checkpoint")
-    per = q_minhash_lsh_pairs(spark, SF_SMOKE, persist_mode="persist")
-    rows_chk = sorted(map(tuple, chk.collect()))
-    rows_per = sorted(map(tuple, per.collect()))
-    assert rows_chk == rows_per and rows_chk
-    with pytest.raises(ValueError, match="persist_mode"):
-        q_minhash_lsh_pairs(spark, SF_SMOKE, persist_mode="bogus")
-
-
-def test_ngram_persist_mode_identical(spark):
-    """Same persist-mode contract for the n-gram pipeline's shared
-    shingle stream (round 6): both modes return identical rows, and an
-    unknown mode fails fast."""
-    import pytest
-
-    chk = q_ngram_jaccard_pairs(spark, SF_SMOKE, persist_mode="checkpoint")
-    per = q_ngram_jaccard_pairs(spark, SF_SMOKE, persist_mode="persist")
-    rows_chk = sorted(map(tuple, chk.collect()))
-    rows_per = sorted(map(tuple, per.collect()))
-    assert rows_chk == rows_per and rows_chk
-    with pytest.raises(ValueError, match="persist_mode"):
-        q_ngram_jaccard_pairs(spark, SF_SMOKE, persist_mode="bogus")
-
-
 def test_decontaminate_broadcast_guard_falls_back(spark):
     """The bench-gram broadcast is size-guarded: when the measured gram
     set exceeds the cap the join must NOT carry a broadcast hint (AQE

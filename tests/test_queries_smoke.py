@@ -1,13 +1,12 @@
-"""t1-style smoke: every queries() entry runs at sf0.001 and returns a
-stable schema; oracle-bearing queries are verified against DuckDB here
-at the smallest scale (full t2 runs via tools/check_correctness.py)."""
-
-import math
+"""t1-style smoke: every queries() entry runs at sf0.001 and matches its
+DuckDB oracle under the strict comparator of tools/check_correctness.py
+(the same gate that script applies at larger scales)."""
 
 import pytest
 
 import __spark_entry__ as entrymod
 from tests.conftest import SF_SMOKE
+from tools.check_correctness import compare
 
 QUERIES = entrymod.queries()
 ORACLES = entrymod.oracle_sql()
@@ -39,40 +38,9 @@ def test_query_runs(spark, duck, name):
     assert df.columns, name
     if name not in ORACLES:
         return
-    res = duck.execute(ORACLES[name])
-    dk_cols = [d[0].lower() for d in res.description]
-    dk_rows = res.fetchall()
-    assert sorted(c.lower() for c in df.columns) == sorted(dk_cols), name
-    assert len(sp_rows) == len(dk_rows), name
-    assert _canon_set(df.columns, sp_rows) == _canon_set(dk_cols, dk_rows), name
-
-
-def _canon_set(cols, rows):
-    import datetime
-    import decimal
-
-    def canon(v):
-        if v is None:
-            return "NULL"
-        if isinstance(v, bool):
-            return str(int(v))
-        if isinstance(v, decimal.Decimal):
-            v = float(v)
-        if isinstance(v, float):
-            if math.isnan(v):
-                return "NaN"
-            if v == int(v) and abs(v) < 1e15:
-                return str(int(v))
-            return f"{v:.6g}"
-        if isinstance(v, datetime.datetime):
-            return v.strftime("%Y-%m-%d %H:%M:%S")
-        if isinstance(v, datetime.date):
-            return v.strftime("%Y-%m-%d")
-        return str(v)
-
-    cols = [c.lower() for c in cols]
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    return sorted("|".join(canon(r[i]) for i in order) for r in rows)
+    rel = duck.sql(ORACLES[name])
+    problems = compare(df.columns, sp_rows, rel.columns, rel.types, rel.fetchall())
+    assert not problems, f"{name}: {'; '.join(problems)}"
 
 
 def test_pq_invariants(spark):

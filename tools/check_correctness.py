@@ -1,15 +1,11 @@
-"""Local t2-style correctness gate: run every queries() entry on Spark
-and its oracle_sql() on DuckDB at sf0.01, compare row count + columns +
-order-insensitive canonicalized values.
+"""Oracle correctness gate: run every queries() entry on Spark and its
+oracle_sql() on DuckDB and compare them with :func:`compare` — column
+names, row count, no HUGEINT oracle output, and the order-insensitive
+row set under the strict canonicalizer (``repr`` floats, microsecond
+timestamps, element-wise lists).  ``tests/test_queries_smoke.py`` runs
+the same comparison for all queries at sf0.001.
 
-Usage: python tools/check_correctness.py [--record] [sf_dir] [query ...]
-
-``--record`` writes each PASSING query's current rotation fingerprint
-to ``tools/offwindow_verified.json``.  ``tests/test_rotation.py``
-accepts a changed query outside the driver's 50-slot window only when
-this file records a pass at exactly the HEAD fingerprint — so an
-off-window verdict is always backed by a re-run of the code as it is
-now, never a stale earlier run.
+Usage: python tools/check_correctness.py [sf_dir] [query ...]
 """
 
 from __future__ import annotations
@@ -18,8 +14,7 @@ import math
 import sys
 import time
 import traceback
-
-sys.path.insert(0, "/root/repo")
+from pathlib import Path
 
 
 def canon(v):
@@ -59,9 +54,37 @@ def rowset(cols, rows):
     return sorted("|".join(canon(r[i]) for i in order) for r in rows)
 
 
+def compare(sp_cols, sp_rows, dk_cols, dk_types, dk_rows) -> list[str]:
+    """Problems separating a Spark result from its DuckDB oracle result;
+    an empty list means they match value for value."""
+    sp_cols = [c.lower() for c in sp_cols]
+    dk_cols = [c.lower() for c in dk_cols]
+    problems = []
+    # Engine-level output types an exact-value hash distinguishes even
+    # when values are identical (round-1 calendar_dim lesson):
+    # DuckDB SUM(int) yields HUGEINT/int128, which no Spark type maps
+    # to.  Treat them as failures so the oracle gets an explicit CAST.
+    bad_types = [
+        f"{c}:{t}"
+        for c, t in zip(dk_cols, map(str, dk_types))
+        if "HUGEINT" in t.upper() or "INT128" in t.upper()
+    ]
+    if bad_types:
+        problems.append(f"oracle HUGEINT output cols {bad_types}")
+    if sorted(sp_cols) != sorted(dk_cols):
+        problems.append(f"cols {sorted(sp_cols)} vs {sorted(dk_cols)}")
+    if len(sp_rows) != len(dk_rows):
+        problems.append(f"rows {len(sp_rows)} vs {len(dk_rows)}")
+    if not problems:
+        a, b = rowset(sp_cols, sp_rows), rowset(dk_cols, dk_rows)
+        if a != b:
+            diff = [(x, y) for x, y in zip(a, b) if x != y][:3]
+            problems.append(f"values differ, e.g. {diff}")
+    return problems
+
+
 def main() -> int:
-    argv = [a for a in sys.argv[1:] if a != "--record"]
-    record = "--record" in sys.argv[1:]
+    argv = sys.argv[1:]
     sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
     only = set(argv[1:])
 
@@ -88,14 +111,14 @@ def main() -> int:
         )
 
     qs, oracles = e.queries(), e.oracle_sql()
-    failed, passed = [], []
+    failed = []
     for name, fn in qs.items():
         if only and name not in only:
             continue
         t0 = time.time()
         try:
             df = fn(spark, sf_dir)
-            sp_cols = [c.lower() for c in df.columns]
+            sp_cols = df.columns
             sp_rows = df.collect()
         except Exception:
             print(f"FAIL  {name}: spark error\n{traceback.format_exc()}")
@@ -108,60 +131,23 @@ def main() -> int:
             continue
         try:
             rel = con.sql(oracles[name])
-            dk_cols = [c.lower() for c in rel.columns]
-            dk_types = [str(t) for t in rel.types]
-            dk_rows = rel.fetchall()
+            dk_cols, dk_types, dk_rows = rel.columns, rel.types, rel.fetchall()
         except Exception:
             print(f"FAIL  {name}: duckdb error\n{traceback.format_exc()}")
             failed.append(name)
             continue
-        problems = []
-        # Engine-level output types the driver's hash distinguishes even
-        # when values are identical (round-1 calendar_dim lesson):
-        # DuckDB SUM(int) yields HUGEINT/int128, which no Spark type maps
-        # to.  Treat them as failures so the oracle gets an explicit CAST.
-        bad_types = [
-            f"{c}:{t}"
-            for c, t in zip(dk_cols, dk_types)
-            if "HUGEINT" in t.upper() or "INT128" in t.upper()
-        ]
-        if bad_types:
-            problems.append(f"oracle HUGEINT output cols {bad_types}")
-        if sorted(sp_cols) != sorted(dk_cols):
-            problems.append(f"cols {sorted(sp_cols)} vs {sorted(dk_cols)}")
-        if len(sp_rows) != len(dk_rows):
-            problems.append(f"rows {len(sp_rows)} vs {len(dk_rows)}")
-        if not problems:
-            a, b = rowset(sp_cols, sp_rows), rowset(dk_cols, dk_rows)
-            if a != b:
-                diff = [
-                    (x, y) for x, y in zip(a, b) if x != y
-                ][:3]
-                problems.append(f"values differ, e.g. {diff}")
+        problems = compare(sp_cols, sp_rows, dk_cols, dk_types, dk_rows)
         if problems:
             print(f"FAIL  {name}: {'; '.join(problems)}")
             failed.append(name)
         else:
             print(f"ok    {name}: {len(sp_rows)} rows match ({time.time()-t0:.1f}s)")
-            passed.append(name)
-
-    if record and passed:
-        import json
-        from pathlib import Path
-
-        from tools.rotation_hash import query_fingerprints
-
-        fp = query_fingerprints()
-        path = Path(__file__).resolve().parent / "offwindow_verified.json"
-        book = json.loads(path.read_text()) if path.exists() else {}
-        for name in passed:
-            book[name] = fp[name]
-        path.write_text(json.dumps(book, indent=1, sort_keys=True) + "\n")
-        print(f"recorded {len(passed)} fingerprints -> {path}")
 
     print(f"\n{len(failed)} failures" + (f": {failed}" if failed else ""))
     return 1 if failed else 0
 
 
 if __name__ == "__main__":
+    # the engine of the checkout this script lives in
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
     raise SystemExit(main())

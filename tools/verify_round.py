@@ -67,15 +67,6 @@ def bare_inventory() -> bool:
 def main() -> int:
     fast = "--fast" in sys.argv
     py = sys.executable
-    # Window-debt summary first (round-8 verdict item 8): the next
-    # round's rotation (d)/(e) tiers come from this line's oldest
-    # cohort, not an alphabetical guess.
-    try:
-        from window_debt import summary_line
-
-        print(summary_line(), flush=True)
-    except Exception as ex:  # report-only — never blocks the gates
-        print(f"window-debt: unavailable ({ex})", flush=True)
     gates = [
         ("pytest", [py, "-m", "pytest", "tests/", "-q"], 2400),
         (
