@@ -1,109 +1,45 @@
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
+"""Benchmark harness: times benched queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints
-the full result doc as a JSON line, followed by a compact
-contract-shaped summary as the FINAL line: {"metric": ..., "value":
-total_sec, "extended_total": ..., "standalone_value": ..., "unit":
-"sec", "sf": ..., ...} — the final line stays inside the driver's
-~2 KB output tail so the banked artifact is always self-contained
-(round-14 verdict item 4: the grown full doc had pushed the headline
-total out of the tail).
+one JSON line.
 
-Execution is measured with the noop sink (full pipeline runs, nothing
-collected to the driver).
+    python bench.py [query ...]
 
-Banking (round-16 verdict item 1): when the standalone A/B child ran,
-its headline total/per-query map IS the banked ``value``/``queries``
-(the clean-by-construction run); the in-process parent's numbers ride
-under ``value_inchain``/``queries_inchain`` for continuity with the
-in-chain series of rounds <= 16.  Methodology, query set and the
-one-line JSON contract are unchanged.
+The query list defaults to ``HEADLINE + EXTENDED`` from
+``etl_python_spark.operators``.  Names in ``HEADLINE`` are summed into
+``value`` (per-query ``queries``/``spread``); every other name lands
+in ``extended``/``extended_total``/``extended_spread``.
 
-Methodology (round-4 re-baseline for Spark 4.1.2): each query runs one
-UNTIMED warm pass, then $SPARK_GRAFT_BENCH_RUNS (default 3) timed runs;
-the reported time is the minimum.  Under Spark 4.1.2 the first
-execution of a query pays whole-stage-codegen compilation + JVM JIT
-that is amortized away in any long-lived session (measured: simhash's
-60-aggregate plan costs 9-64 s on first execution, 2.5-3 s steady
-state, at EVERY data scale — it is per-session compile cost, not data
-cost), so a single cold pass measures the compiler, not the engine.
-Steady-state min is the number that predicts 100 TB throughput, where
-compile time is noise against hours of scan/shuffle.  Per-query spread
-(max/min of the timed runs) is emitted under "spread" so run-to-run
-variance stays visible.
+Methodology: each query runs one UNTIMED warm pass, then RUNS timed
+runs into the noop sink (full pipeline, nothing collected to the
+driver); the reported time is the minimum and ``spread`` is max - min.
+Under Spark 4.1.2 the first execution of a query pays whole-stage
+codegen and JVM JIT that any long-lived session amortizes away
+(simhash's 60-aggregate plan: 9-64 s cold, 2.5-3 s warm, at every data
+scale), so a single cold pass measures the compiler, not the engine.
+
+``env`` stamps the host (cpus; load and stray JVMs before this JVM
+starts) and gates nothing: ``perfbench/run.py`` is the regression gate.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import subprocess
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-HEADLINE = [
-    "pricing_summary",
-    "faturamento_rollup",
-    "top_customers_per_nation",
-    "year_pivot",
-    "range_condition_join",
-    "preagg_join",
-    "latest_order_per_customer",
-    "sessionize",
-    "hourly_event_counts",
-    "supplier_region_share",
-    "sla_leadtime",
-    "sliding_event_counts",
-    "dedup_exact",
-    "ngram_jaccard_pairs",
-    "minhash_lsh_pairs",
-    "simhash",
-    "text_quality",
-    "ann_bruteforce",
-    "ann_ivf",
-    "multimodal_metadata",
-    "media_features",
-    "json_export",
-]
+from etl_python_spark.operators import EXTENDED, HEADLINE, all_queries  # noqa: E402
 
-# Heavy-family group (round-7 verdict item 5): today's most expensive
-# queries, benched per round so regressions in the ML-scale family stay
-# visible.  Kept OUT of the headline total for baseline continuity with
-# rounds 1-7; reported under "extended"/"extended_total".  Disable with
-# SPARK_GRAFT_BENCH_EXTENDED=0.
-EXTENDED = [
-    "ann_ivf_fitted",
-    "kmeans_embeddings",
-    "dedup_components",
-    "semantic_dedup",
-    # round-8 additions: graph + similarity-join heavies
-    "pagerank_copurchase",
-    "fuzzy_components",
-    "market_basket",
-    # late round-8: the dedup-endgame composition (pair graph + CC +
-    # corpus join) — the soak's slowest entry, watch it per round
-    "leakage_safe_split",
-    # round 11: the composed IVF×PQ index (coarse fit + PQ fit + route/
-    # ADC/re-rank) — the heaviest query in the repo; its recall audit
-    # shares the fit and adds the brute-force ground truth
-    "ivf_pq_search",
-    "ivf_pq_recall",
-    # round 14 (r13 verdict item 7): the takedown compositions
-    # (fit + delete + serve) — first driver-verified in r13, now
-    # cost-tracked like the other lifecycle heavies
-    "ann_index_on_delete",
-    "dedup_pairs_on_delete",
-]
+# min of 3: at min-of-2 the heavy dedup queries showed 1-3 s
+# run-to-run spread from GC timing
+RUNS = 3
 
 
-def _env_conditions() -> dict:
-    """Host conditions captured BEFORE this bench's own JVM starts
-    (round-9 verdict item 8): stray java processes and load average,
-    so a future cross-round drift adjudication needs no archaeology —
-    uniform multi-query slowdowns under nonzero strays/load are host
-    contamination, not regressions."""
-    import subprocess
-
+def _env_stamp() -> dict:
+    """Stray java processes and load average before this JVM starts."""
     try:
         out = subprocess.run(
             ["pgrep", "-cx", "java"], capture_output=True, text=True
@@ -111,10 +47,7 @@ def _env_conditions() -> dict:
         strays = int(out) if out else 0
     except (OSError, ValueError):
         strays = -1
-    try:
-        load1, load5, _ = os.getloadavg()
-    except OSError:
-        load1 = load5 = -1.0
+    load1, load5, _ = os.getloadavg()
     return {
         "stray_jvms_at_start": strays,
         "load1_at_start": round(load1, 2),
@@ -122,243 +55,18 @@ def _env_conditions() -> dict:
     }
 
 
-MAX_BANKABLE_LOAD1 = 2.0
-MAX_BANKABLE_LOAD5 = 2.0
-
-
-def _await_clean_host(
-    max_wait_s: float,
-    allow_self_load5: bool = False,
-    pre_child_env: dict | None = None,
-) -> dict:
-    """Round-11 verdict item 6: bench.py used to CAPTURE the host env
-    and then bank regardless (BENCH_r11 shipped with 1 stray JVM and
-    load1 10.47).  Now it actively waits (up to
-    $SPARK_GRAFT_BENCH_WAIT seconds, default 180, polled every 5 s)
-    for zero stray JVMs, load1 <= 2 AND load5 <= 2, and stamps the
-    banked artifact ``env.contaminated`` when the host never settled —
-    so a loaded-host number can never masquerade as a clean banking
-    again.  The load5 condition is round-13's lesson: r13's standalone
-    A/B passed a load1-only gate with load5 4.23 (host still cooling
-    from the in-chain run) and banked numbers ~1.65x an idle host.
-    Unknown readings (-1) don't block: "can't measure" is not "dirty".
-
-    ``allow_self_load5`` (round-15 ADVICE item 1): when the standalone
-    A/B child just ran IN-PROCESS on a host that was clean BEFORE the
-    child started, the child's own 32-thread run is the only workload
-    in the trailing 5-minute load window — its residual load5 is
-    self-inflicted measurement exhaust, not external contamination,
-    and load5 mathematically cannot decay below 2.0 within the
-    parent's wait budget.  With the flag set, a high load5 alone does
-    not mark the parent contaminated (strays and load1 still gate —
-    load1 decays fast enough to catch any ONGOING external workload);
-    the banked env records the discount and the pre-child readings so
-    a drift adjudication has the full picture."""
-    deadline = time.time() + max_wait_s
-    while True:
-        env = _env_conditions()
-        load5_dirty = env["load5_at_start"] > MAX_BANKABLE_LOAD5
-        discounted = bool(load5_dirty and allow_self_load5)
-        if discounted:
-            load5_dirty = False
-        dirty = (
-            env["stray_jvms_at_start"] > 0
-            or env["load1_at_start"] > MAX_BANKABLE_LOAD1
-            or load5_dirty
-        )
-        if not dirty or time.time() >= deadline:
-            env["contaminated"] = dirty
-            env["waited_s"] = round(max(0.0, max_wait_s - (deadline - time.time())), 1)
-            if discounted and not dirty:
-                env["load5_self_discounted"] = True
-                env["pre_child_env"] = pre_child_env
-            return env
-        time.sleep(5)
-
-
-def _run_standalone_child() -> dict:
-    """Round-14 verdict item 5: the standalone A/B child now runs
-    FIRST — before this process starts any JVM — so on the driver's
-    cold host it banks with waited_s ≈ 0 instead of burning 5+ minutes
-    of the gate budget waiting for load5 to decay from the in-chain
-    run.  The child is headline-only, does its own clean-host wait,
-    and is guarded against recursion (SPARK_GRAFT_BENCH_AB=0)."""
-    import subprocess
-
-    child_env = dict(
-        os.environ,
-        SPARK_GRAFT_BENCH_AB="0",
-        SPARK_GRAFT_BENCH_EXTENDED="0",
-        # inside a long verify chain the host may still be cooling
-        # from earlier gates — give the child its own decay budget
-        # unless the caller already raised the default
-        SPARK_GRAFT_BENCH_WAIT=str(
-            max(float(os.environ.get("SPARK_GRAFT_BENCH_WAIT", "180")), 600.0)
-        ),
-    )
-    try:
-        proc = subprocess.run(
-            [sys.executable, os.path.abspath(__file__)],
-            env=child_env,
-            capture_output=True,
-            text=True,
-            # wait cap 600 s + headline bench ~300-400 s + startup;
-            # must stay under verify_round's 3600 s outer gate budget
-            timeout=1200,
-        )
-        docs = []
-        for line in proc.stdout.splitlines():
-            if line.startswith("{"):
-                try:
-                    docs.append(json.loads(line))
-                except ValueError:
-                    pass
-        # the child prints the FULL doc then the compact summary line;
-        # take the full one (it carries per-query spread)
-        sub = next((d for d in reversed(docs) if "spread" in d), docs[-1])
-        return {
-            "value": sub["value"],
-            "queries": sub["queries"],
-            "spread": sub.get("spread"),
-            "env": sub.get("env"),
-        }
-    except Exception as exc:  # noqa: BLE001 — A/B is best-effort
-        return {"error": repr(exc)}
-
-
-def _bank_standalone_primary(doc: dict, standalone: dict | None) -> dict:
-    """Round-16 verdict item 1: the banked headline map must be the
-    clean run.  The in-process parent measures AFTER the standalone
-    A/B child has heated the host, so its per-query map reads
-    uniformly high (r16: parent 24.2 s vs child 20.1 s on identical
-    code, and PERF_r16 compared warm-host maps across rounds into 21
-    phantom regressions).  The standalone child is the clean run by
-    construction — a fresh process that runs FIRST and does its own
-    clean-host wait — so when it produced a map, bank ITS total/map/
-    env as the primary ``value``/``queries``/``env`` and keep the
-    parent's in-chain numbers under ``*_inchain`` (informational,
-    like-for-like with the in-chain series of earlier rounds).  The
-    extended group still measures in the parent (the child is
-    headline-only)."""
-    if not standalone or not standalone.get("queries"):
-        return doc
-    doc["value_inchain"] = doc["value"]
-    doc["queries_inchain"] = doc["queries"]
-    doc["spread_inchain"] = doc.get("spread")
-    doc["env_inchain"] = doc.get("env")
-    doc["value"] = standalone["value"]
-    doc["queries"] = standalone["queries"]
-    if standalone.get("spread") is not None:
-        doc["spread"] = standalone["spread"]
-    if standalone.get("env") is not None:
-        doc["env"] = standalone["env"]
-    doc["banked_map"] = "standalone_ab_child"
-    return doc
-
-
-def _compact_summary(doc: dict) -> dict:
-    """Round-14 verdict item 4: the driver keeps only a ~2 KB tail of
-    bench output, and by r14 the full doc had grown past it — the
-    banked BENCH_r*.json carried ``parsed: null`` and the headline
-    total had to be recovered from a side file.  Emit a compact,
-    contract-shaped doc as the FINAL stdout line so the banked
-    artifact is always self-contained: the three totals first, then
-    env + per-query maps trimmed to fit the tail."""
-    standalone = doc.get("standalone") or {}
-    env = doc.get("env")
-    if isinstance(env, dict) and "pre_child_env" in env:
-        # the pre-child snapshot is adjudication detail — keep the
-        # compact tail line lean (the full doc line carries it)
-        env = {k: v for k, v in env.items() if k != "pre_child_env"}
-    compact = {
-        "metric": doc["metric"],
-        "value": doc["value"],
-        "extended_total": doc.get("extended_total"),
-        "standalone_value": standalone.get("value"),
-        "unit": doc["unit"],
-        "sf": doc["sf"],
-        "env": env,
-        "standalone_env": standalone.get("env"),
-        "queries": doc.get("queries"),
-        "extended": doc.get("extended"),
-    }
-    # keep the line comfortably inside the driver's 2 KB tail: drop
-    # the per-query maps (largest members) until it fits
-    for drop in ("extended", "queries", "standalone_env"):
-        if len(json.dumps(compact)) <= 1900:
-            break
-        compact.pop(drop, None)
-    return compact
-
-
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
-    max_wait = float(os.environ.get("SPARK_GRAFT_BENCH_WAIT", "180"))
-
-    # Standalone A/B first (round-12 verdict item 7 + round-14 item
-    # 5): any bench that runs inside a longer chain reads uniformly
-    # high, so the cross-round comparator is a fresh child process
-    # measured BEFORE this process heats the host.
-    standalone = None
-    pre_child_env = None
-    if os.environ.get("SPARK_GRAFT_BENCH_AB", "1") != "0":
-        pre_child_env = _env_conditions()
-        standalone = _run_standalone_child()
-
-    # Round-15 ADVICE item 1: with the child running first, the
-    # parent's wait starts right after a multi-minute 32-thread run —
-    # load5 cannot decay below 2.0 inside the default 180 s, so the
-    # parent banked contaminated=true on essentially every gate run
-    # and the last-green snapshot mechanism was effectively dead.
-    # Two-part fix: (a) when the host was CLEAN before the child
-    # started, the child's trailing load5 is self-inflicted — discount
-    # it from the parent's contamination verdict (strays + load1 still
-    # gate); (b) give the parent the same 600 s wait floor the child
-    # gets, so even without the discount it has a real decay budget.
-    discount_self_load5 = False
-    if standalone is not None and pre_child_env is not None:
-        pre_clean = (
-            pre_child_env["stray_jvms_at_start"] <= 0
-            and pre_child_env["load1_at_start"] <= MAX_BANKABLE_LOAD1
-            and pre_child_env["load5_at_start"] <= MAX_BANKABLE_LOAD5
-        )
-        # the child banking clean is equally good evidence: it verified
-        # a settled host immediately before ITS run (possibly after
-        # waiting out earlier chain exhaust), so everything in the
-        # trailing load window since then is the child itself
-        child_clean = (
-            (standalone.get("env") or {}).get("contaminated") is False
-        )
-        discount_self_load5 = pre_clean or child_clean
-        max_wait = max(max_wait, 600.0)
-
-    env_conditions = _await_clean_host(
-        max_wait,
-        allow_self_load5=discount_self_load5,
-        pre_child_env=pre_child_env,
-    )
-
-    from etl_python_spark.session import get_spark
-    from etl_python_spark.operators import all_queries
-
-    spark = get_spark("bench")
-    spark.sparkContext.setLogLevel("ERROR")
-    qs = all_queries()
-
-    # warm-up: tiny query to JIT the scan/agg paths, plus one trivial
-    # Pandas UDF pass so the Python worker pool (one per core, reused
-    # across queries) is forked before any timed query needs it, plus
-    # the md5/conv digest path the engine-agnostic hash family uses
-    # (NumberConverter JIT costs ~1s on its first execution otherwise)
-    spark.read.parquet(os.path.join(sf_dir, "nation.parquet")).count()
-    sc = spark.sparkContext
-    spark.range(sc.defaultParallelism * 4).repartition(sc.defaultParallelism).mapInPandas(
-        lambda it: it, "id long"
-    ).count()
+def _warm_up(spark, sf_dir: str) -> None:
+    """JIT the scan/agg paths, fork the Python worker pool (one per
+    core, reused across queries) and JIT the md5/conv digest path the
+    hash family uses, so no timed query pays for them."""
     from pyspark.sql import functions as F
 
-    spark.range(200_000).repartition(sc.defaultParallelism).select(
+    spark.read.parquet(os.path.join(sf_dir, "nation.parquet")).count()
+    par = spark.sparkContext.defaultParallelism
+    spark.range(par * 4).repartition(par).mapInPandas(
+        lambda it: it, "id long"
+    ).count()
+    spark.range(200_000).repartition(par).select(
         F.sum(
             F.conv(F.substring(F.md5(F.col("id").cast("string")), 1, 15), 16, 10)
             .cast("long")
@@ -366,50 +74,56 @@ def main() -> None:
         )
     ).count()
 
-    # default 3 since round 6: at min-of-2 the heavy dedup queries
-    # (ngram/minhash) showed 1-3 s run-to-run spread from GC timing —
-    # one extra sample stabilizes the min at ~30 s extra wall-clock
-    n_runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3")))
 
-    def bench_group(names: list[str]) -> tuple[dict[str, float], dict[str, float]]:
-        timings: dict[str, float] = {}
-        spread: dict[str, float] = {}
-        for name in names:
-            fn = qs[name]
+def main(names: list[str] | None = None) -> None:
+    if names is None:
+        names = sys.argv[1:] or HEADLINE + EXTENDED
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
+    env = _env_stamp()
 
-            def run() -> float:
-                t0 = time.time()
-                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-                return time.time() - t0
+    from etl_python_spark.session import get_spark
 
-            run()  # warm pass: compiles this query's generated code, untimed
-            samples = [run() for _ in range(n_runs)]
-            timings[name] = round(min(samples), 3)
-            spread[name] = round(max(samples) - min(samples), 3)
-        return timings, spread
+    qs = all_queries()
+    unknown = [n for n in names if n not in qs]
+    if unknown:
+        raise SystemExit(f"unknown queries: {unknown}")
+    spark = get_spark("bench")
+    spark.sparkContext.setLogLevel("ERROR")
+    env["cpus"] = spark.sparkContext.defaultParallelism
+    _warm_up(spark, sf_dir)
 
-    timings, spread = bench_group(HEADLINE)
+    timings: dict[str, float] = {}
+    spread: dict[str, float] = {}
+    for name in names:
+        fn = qs[name]
+
+        def run() -> float:
+            t0 = time.time()
+            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+            return time.time() - t0
+
+        run()  # warm pass: compiles this query's generated code, untimed
+        samples = [run() for _ in range(RUNS)]
+        timings[name] = round(min(samples), 3)
+        spread[name] = round(max(samples) - min(samples), 3)
+
+    head = [n for n in names if n in HEADLINE]
+    ext = [n for n in names if n not in HEADLINE]
     doc = {
         "metric": "headline_queries_total",
-        "value": round(sum(timings.values()), 3),
+        "value": round(sum(timings[n] for n in head), 3),
         "unit": "sec",
-        "queries": timings,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-        "method": f"per-query warm pass + min of {n_runs} timed runs",
-        "spread": spread,
-        "env": env_conditions,
+        "method": f"per-query warm pass + min of {RUNS} timed runs",
+        "queries": {n: timings[n] for n in head},
+        "spread": {n: spread[n] for n in head},
+        "extended": {n: timings[n] for n in ext},
+        "extended_total": round(sum(timings[n] for n in ext), 3),
+        "extended_spread": {n: spread[n] for n in ext},
+        "env": env,
     }
-    if os.environ.get("SPARK_GRAFT_BENCH_EXTENDED", "1") != "0":
-        ext, ext_spread = bench_group(EXTENDED)
-        doc["extended"] = ext
-        doc["extended_total"] = round(sum(ext.values()), 3)
-        doc["extended_spread"] = ext_spread
-    if standalone is not None:
-        doc["standalone"] = standalone
-        _bank_standalone_primary(doc, standalone)
     print(json.dumps(doc))
-    # the compact summary MUST be the final line (driver tail contract)
-    print(json.dumps(_compact_summary(doc)))
 
 
 if __name__ == "__main__":

@@ -548,8 +548,11 @@ def q_customer_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         "(_n % 4) + (_pos - 1 - (_n % 4) * ((_n DIV 4) + 1))"
         " DIV GREATEST(_n DIV 4, 1)) + 1 AS INT)"
     )
+    # exact median in integer cents, then one explicit half-up rounding:
+    # rounding a median of doubles ties differently across engines
+    cents = F.round(F.col("fat") * 100).cast("bigint")
     med = ranged.groupBy("n_name").agg(
-        F.round(F.median("fat"), 2).alias("mediana_nacao")
+        (F.floor(F.median(cents) + 0.5) / 100).alias("mediana_nacao")
     )
     return (
         local.join(F.broadcast(off_df), ["n_name", "_pid"])
@@ -571,7 +574,8 @@ WITH per_cust AS (
 )
 SELECT n_name, c_custkey, fat,
        NTILE(4) OVER (PARTITION BY n_name ORDER BY fat DESC, c_custkey ASC) AS quartil,
-       ROUND(median(fat) OVER (PARTITION BY n_name), 2) AS mediana_nacao
+       floor(median(CAST(round(fat * 100) AS BIGINT)) OVER (PARTITION BY n_name)
+             + 0.5) / 100 AS mediana_nacao
 FROM per_cust
 """
 

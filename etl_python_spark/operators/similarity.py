@@ -1542,6 +1542,9 @@ def _ivf_pq_shortlist(
             ),
         )
     )
+    # The query's M×KS LUT is copied onto each of its N_PROBE probe rows
+    # on the broadcast side.  That is fine while PQ_M × PQ_KS × N_PROBE
+    # stays small; if those grow, re-join the LUT after the explode.
     qside = (
         uemb.filter(F.col("vec_id") < N_QUERY)
         .select(

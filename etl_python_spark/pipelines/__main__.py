@@ -16,29 +16,13 @@ import sys
 
 def main(argv: list[str]) -> int:
     sf_dir = argv[1] if len(argv) > 1 else "/root/testdata/sf0.001"
-    names = argv[2:]
 
-    from ..operators import all_queries
+    from ..operators import HEADLINE, all_queries
     from ..session import get_spark
     from .runner import format_table, run_jobs
 
     qs = all_queries()
-    if not names:
-        import importlib
-        from pathlib import Path
-
-        # the default list lives in bench.py at the repo root, which is
-        # only importable when cwd is the root — pin the root onto
-        # sys.path so `python -m etl_python_spark.pipelines` works from
-        # any directory
-        repo_root = str(Path(__file__).resolve().parents[2])
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        names = [
-            n
-            for n in importlib.import_module("bench").HEADLINE
-            if n in qs
-        ]
+    names = argv[2:] or HEADLINE
     unknown = [n for n in names if n not in qs]
     if unknown:
         print(f"unknown queries: {unknown}", file=sys.stderr)

@@ -1,430 +1,56 @@
-"""Driver-contract pin for bench.py: the full result doc as a JSON
-line plus a compact contract-shaped summary as the FINAL line (inside
-the driver's ~2 KB tail), every headline query present with a positive
-timing.  Runs in-process at sf0.001 with a single timed run so it
-stays cheap; the driver runs the same entry point at sf0.1."""
+"""Contract pin for bench.py: one JSON object as the final stdout line,
+with headline names summed into ``value`` and every other name reported
+under ``extended``.  One in-process run at sf0.001 on a two-query subset
+(one headline, one extended) is shared by both tests so it stays cheap."""
 
+import contextlib
+import io
 import json
 
+import pytest
 
-def test_bench_emits_full_doc_plus_compact_tail(spark, capsys, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    monkeypatch.setenv("SPARK_GRAFT_BENCH_RUNS", "1")
-    # in-process run: the test session's own JVM would read as a
-    # "stray", so don't wait for a clean host here; and the standalone
-    # A/B child must stay off — it spawns a second full bench process,
-    # far too heavy for a unit test
-    monkeypatch.setenv("SPARK_GRAFT_BENCH_WAIT", "0")
-    monkeypatch.setenv("SPARK_GRAFT_BENCH_AB", "0")
+from tests.conftest import SF_SMOKE
+
+
+@pytest.fixture(scope="module")
+def bench_doc(spark):
+    """Final stdout line of ``bench.main`` over the two-query subset."""
     import bench
 
-    bench.main()
-    out = [l for l in capsys.readouterr().out.strip().splitlines() if l.strip()]
-    assert len(out) == 2, "bench must print the full doc + compact tail"
-    doc = json.loads(out[0])
+    buf = io.StringIO()
+    with pytest.MonkeyPatch.context() as mp, contextlib.redirect_stdout(buf):
+        mp.setenv("SPARK_GRAFT_SF_DIR", SF_SMOKE)
+        bench.main(["pricing_summary", "dedup_components"])
+    out = [l for l in buf.getvalue().splitlines() if l.strip()]
+    return json.loads(out[-1])
+
+
+def test_bench_emits_full_doc_plus_compact_tail(bench_doc):
+    """The final line is the whole result doc: headline fields, env
+    stamp, and every headline name of the run with a positive timing."""
+    doc = bench_doc
     assert doc["metric"] == "headline_queries_total"
-    assert doc["unit"] == "sec" and doc["value"] > 0
-    assert doc["sf"] == 0.001
-    assert set(doc["queries"]) == set(bench.HEADLINE)
-    assert all(t >= 0 for t in doc["queries"].values())
-    assert set(doc["spread"]) == set(bench.HEADLINE)
-    # the FINAL line is the compact summary: self-contained totals,
-    # small enough for the driver's ~2 KB output tail (round-14
-    # verdict item 4)
-    compact = json.loads(out[-1])
-    assert len(out[-1]) <= 2000
-    assert compact["metric"] == "headline_queries_total"
-    assert compact["value"] == doc["value"]
-    assert compact["extended_total"] == doc["extended_total"]
-    assert "standalone_value" in compact
-    assert compact["env"] == doc["env"]
+    assert doc["unit"] == "sec" and doc["sf"] == 0.001
+    assert doc["method"] == "per-query warm pass + min of 3 timed runs"
+    assert set(doc["queries"]) == set(doc["spread"]) == {"pricing_summary"}
+    assert doc["value"] == doc["queries"]["pricing_summary"] > 0
+    assert all(s >= 0 for s in doc["spread"].values())
+    env = doc["env"]
+    assert env["cpus"] >= 1
+    assert {"stray_jvms_at_start", "load1_at_start", "load5_at_start"} <= set(env)
 
 
-def test_bench_extended_group(spark, capsys, monkeypatch):
-    """The heavy-family group rides in the full doc line, separate
-    from the headline total (baseline continuity)."""
-    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    monkeypatch.setenv("SPARK_GRAFT_BENCH_RUNS", "1")
-    monkeypatch.setenv("SPARK_GRAFT_BENCH_WAIT", "0")
-    monkeypatch.setenv("SPARK_GRAFT_BENCH_AB", "0")
-    import bench
+def test_bench_extended_group(bench_doc):
+    """Names outside HEADLINE ride under ``extended``, separate from the
+    headline total."""
+    from etl_python_spark.operators import EXTENDED, HEADLINE
 
-    bench.main()
-    out = [l for l in capsys.readouterr().out.strip().splitlines() if l.strip()]
-    docs = [json.loads(l) for l in out]
-    doc = next(d for d in docs if "extended_spread" in d)  # the full doc
-    assert set(doc["extended"]) == set(bench.EXTENDED)
-    assert doc["extended_total"] > 0
-    assert abs(doc["value"] - sum(doc["queries"].values())) < 1e-6
-    assert not set(bench.EXTENDED) & set(doc["queries"])
-
-
-def test_banked_map_prefers_standalone_child():
-    """Round-16 verdict item 1: the banked value/queries/env must be
-    the standalone A/B child's (the clean run by construction); the
-    parent's warm in-chain numbers move to *_inchain.  Without a
-    usable child map (AB off, child error) the parent's map banks
-    unchanged."""
-    import bench
-
-    parent = {
-        "metric": "headline_queries_total",
-        "value": 24.2,
-        "unit": "sec",
-        "sf": 0.1,
-        "queries": {"a": 12.1, "b": 12.1},
-        "spread": {"a": 0.5, "b": 0.5},
-        "env": {"contaminated": False, "load5_self_discounted": True},
+    assert "pricing_summary" in HEADLINE and "dedup_components" in EXTENDED
+    assert not set(HEADLINE) & set(EXTENDED)
+    doc = bench_doc
+    assert set(doc["extended"]) == set(doc["extended_spread"]) == {
+        "dedup_components"
     }
-    child = {
-        "value": 20.1,
-        "queries": {"a": 10.0, "b": 10.1},
-        "spread": {"a": 0.1, "b": 0.2},
-        "env": {"contaminated": False, "waited_s": 190.7},
-    }
-    doc = bench._bank_standalone_primary(dict(parent), child)
-    assert doc["value"] == 20.1 and doc["queries"] == child["queries"]
-    assert doc["spread"] == child["spread"]
-    assert doc["env"] == child["env"]
-    assert doc["value_inchain"] == 24.2
-    assert doc["queries_inchain"] == parent["queries"]
-    assert doc["env_inchain"] == parent["env"]
-    assert doc["banked_map"] == "standalone_ab_child"
-
-    # child errored -> parent map banks unchanged, no inchain aliases
-    doc2 = bench._bank_standalone_primary(dict(parent), {"error": "boom"})
-    assert doc2["value"] == 24.2 and "value_inchain" not in doc2
-    doc3 = bench._bank_standalone_primary(dict(parent), None)
-    assert doc3["value"] == 24.2 and "banked_map" not in doc3
-
-
-def test_compact_summary_trims_to_tail_budget():
-    """The compact line drops its per-query maps (largest members)
-    until it fits the ~2 KB driver tail, but never the three totals."""
-    import bench
-
-    fat = {
-        "metric": "headline_queries_total",
-        "value": 12.345,
-        "unit": "sec",
-        "sf": 0.1,
-        "queries": {f"query_with_a_long_name_{i:03d}": 1.234 for i in range(60)},
-        "extended": {f"extended_query_name_{i:03d}": 9.876 for i in range(40)},
-        "extended_total": 98.765,
-        "env": {"stray_jvms_at_start": 0, "load1_at_start": 0.1,
-                "load5_at_start": 0.2, "contaminated": False, "waited_s": 3},
-        "standalone": {
-            "value": 11.111,
-            "queries": {f"q{i}": 1.0 for i in range(60)},
-            "env": {"contaminated": False, "waited_s": 1.0,
-                    "load5_at_start": 0.5},
-        },
-    }
-    compact = bench._compact_summary(fat)
-    line = json.dumps(compact)
-    assert len(line) <= 2000
-    assert compact["value"] == 12.345
-    assert compact["extended_total"] == 98.765
-    assert compact["standalone_value"] == 11.111
-    # a small doc keeps its maps
-    small = dict(fat, queries={"a": 1.0}, extended={"b": 2.0})
-    c2 = bench._compact_summary(small)
-    assert c2["queries"] == {"a": 1.0} and c2["extended"] == {"b": 2.0}
-
-
-def test_extended_gate_flags_injected_regression():
-    """Round-8 verdict item 4: the extended group is gated, not just
-    banked — verify_round.check_extended alarms on a 2x-and-+2s warm
-    regression vs the previous round's BENCH file, and stays quiet on
-    noise-sized drift, sub-second blips, and first bankings."""
-    import sys
-    from pathlib import Path
-
-    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
-    from verify_round import check_extended
-
-    baseline = {"extended": {"semantic_dedup": 3.66, "pq_probe": 0.4}}
-    # overrides passed EXPLICITLY (round-9 ADVICE: the injected
-    # scenarios must not depend on the live extended_baseline.json)
-    none = {}
-    # 2.2x and +4.4s -> alarm
-    alarms = check_extended(
-        {"extended": {"semantic_dedup": 8.05}}, baseline, overrides=none
-    )
-    assert len(alarms) == 1 and "semantic_dedup" in alarms[0]
-    # 1.5x -> no alarm
-    assert not check_extended(
-        {"extended": {"semantic_dedup": 5.5}}, baseline, overrides=none
-    )
-    # 3x but sub-second absolute delta (+0.8s < +2s floor) -> no alarm
-    assert not check_extended(
-        {"extended": {"pq_probe": 1.2}}, baseline, overrides=none
-    )
-    # first banking: query absent from baseline -> no alarm
-    assert not check_extended(
-        {"extended": {"new_heavy": 9.9}}, baseline, overrides=none
-    )
-    # empty/missing baselines -> no alarm
-    assert not check_extended(
-        {"extended": {"semantic_dedup": 8.0}}, {}, overrides=none
-    )
-    assert not check_extended({}, baseline, overrides=none)
-
-
-def test_extended_gate_honors_deliberate_rebaselines():
-    """A deliberate tradeoff re-baselined in tools/extended_baseline.json
-    raises the reference to max(banked, override): the star-CC default
-    (~3.1s at sf0.1) must not alarm against the stale min-label
-    banking (1.94s), while a genuine 2x regression past the OVERRIDE
-    still fires."""
-    import sys
-    from pathlib import Path
-
-    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
-    from verify_round import check_extended
-
-    banked = {"extended": {"dedup_components": 1.94}}
-    ov = {"dedup_components": 3.07}
-    # post-switch time under the stale banking alone would alarm...
-    assert not check_extended(
-        {"extended": {"dedup_components": 4.36}}, banked, overrides=ov
-    )
-    # ...but a real regression beyond the override still fires
-    alarms = check_extended(
-        {"extended": {"dedup_components": 9.5}}, banked, overrides=ov
-    )
-    assert len(alarms) == 1 and "dedup_components" in alarms[0]
-
-
-def test_extended_overrides_require_plan_audit_citation(tmp_path, capsys):
-    """Round-9 verdict item 4: an extended_baseline.json override
-    without a plan_audit_ref citation must FAIL the gate (ValueError
-    from the loader -> alarm line from check_extended), the live repo
-    file must parse clean, a stale override (banked caught up) prints
-    a removal warning, and the forgiven delta is printed per run."""
-    import json
-    import sys
-    from pathlib import Path
-
-    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
-    import pytest
-
-    from verify_round import check_extended, load_extended_overrides
-
-    # bare-number override (the pre-round-10 schema) -> rejected
-    p = tmp_path / "bare.json"
-    p.write_text(json.dumps({"dedup_components": 3.07}))
-    with pytest.raises(ValueError, match="plan_audit_ref"):
-        load_extended_overrides(str(p))
-
-    # empty citation -> rejected
-    p2 = tmp_path / "empty_ref.json"
-    p2.write_text(
-        json.dumps({"x": {"sec": 1.0, "plan_audit_ref": "  "}})
-    )
-    with pytest.raises(ValueError, match="plan_audit_ref"):
-        load_extended_overrides(str(p2))
-
-    # cited override -> parses; commentary keys skipped
-    p3 = tmp_path / "ok.json"
-    p3.write_text(
-        json.dumps(
-            {
-                "_comment": "why",
-                "x": {"sec": 2.5, "plan_audit_ref": "PLAN_AUDIT.md:1"},
-            }
-        )
-    )
-    assert load_extended_overrides(str(p3)) == {"x": 2.5}
-
-    # the LIVE repo file must parse clean (fully cited when non-empty;
-    # since round 14 the r9-era CC overrides are retired, so empty is
-    # the expected steady state — an override present without a valid
-    # citation would raise here)
-    live = load_extended_overrides()
-    assert isinstance(live, dict)
-
-    # an invalid live-style load inside check_extended -> alarm, not crash
-    import verify_round as vr
-
-    orig = vr.load_extended_overrides
-    vr.load_extended_overrides = lambda path=None: (_ for _ in ()).throw(
-        ValueError("override 'x' must ... plan_audit_ref")
-    )
-    try:
-        alarms = check_extended(
-            {"extended": {"x": 1.0}}, {"extended": {"x": 1.0}}
-        )
-        assert alarms and "override invalid" in alarms[0]
-    finally:
-        vr.load_extended_overrides = orig
-
-    # stale override: banked >= override -> removal warning (the max()
-    # makes the override a no-op from here on)
-    capsys.readouterr()
-    assert not check_extended(
-        {"extended": {"x": 3.1}},
-        {"extended": {"x": 3.05}},
-        overrides={"x": 3.05},
-    )
-    out = capsys.readouterr().out
-    assert "override stale" in out and "remove it" in out
-
-    # banked still BELOW the override (even within noise) -> the
-    # override is live, no removal prompt: removing it would drop the
-    # reference under current runtimes (round-10 ADVICE)
-    capsys.readouterr()
-    assert not check_extended(
-        {"extended": {"x": 3.1}},
-        {"extended": {"x": 3.0}},
-        overrides={"x": 3.05},
-    )
-    out = capsys.readouterr().out
-    assert "override stale" not in out
-
-    # live override still forgiving: the delta is printed
-    capsys.readouterr()
-    assert not check_extended(
-        {"extended": {"x": 3.0}},
-        {"extended": {"x": 1.9}},
-        overrides={"x": 3.07},
-    )
-    out = capsys.readouterr().out
-    assert "forgiving" in out and "+1.17s" in out
-
-
-def test_extended_baseline_is_per_query_min_and_skips_contaminated():
-    """Round-14 ADVICE: the gate baseline is the per-query MIN of the
-    newest banked BENCH and the last-green snapshot (no mtime race, no
-    geometric compounding), and a contaminated run — parent OR
-    standalone child — must never refresh the snapshot."""
-    import sys
-    from pathlib import Path
-
-    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
-    import verify_round as vr
-
-    # per-query min across sources
-    base = vr._extended_baseline()
-    assert isinstance(base, dict)
-    if base:  # repo carries banked/snapshot docs
-        assert all(v > 0 for v in base["extended"].values())
-
-    # contamination detection: parent env, standalone env, clean
-    assert vr._bench_contaminated({"env": {"contaminated": True}})
-    assert vr._bench_contaminated(
-        {
-            "env": {"contaminated": False},
-            "standalone": {"env": {"contaminated": True}},
-        }
-    )
-    assert not vr._bench_contaminated(
-        {
-            "env": {"contaminated": False},
-            "standalone": {"env": {"contaminated": False}},
-        }
-    )
-    assert not vr._bench_contaminated({})
-    # a failed standalone child (error, no env) does not read as dirty
-    assert not vr._bench_contaminated(
-        {"env": {"contaminated": False}, "standalone": {"error": "boom"}}
-    )
-
-
-def test_await_clean_host_gates_on_env(monkeypatch):
-    """Round-11 verdict item 6: the banked env block must carry an
-    explicit contamination verdict.  Dirty host past the wait budget ->
-    contaminated: true; clean host -> false immediately; unknown
-    readings (-1) never block."""
-    import bench
-
-    def fake_env(strays, load1):
-        return lambda: {
-            "stray_jvms_at_start": strays,
-            "load1_at_start": load1,
-            "load5_at_start": load1,
-        }
-
-    monkeypatch.setattr(bench, "_env_conditions", fake_env(1, 9.0))
-    env = bench._await_clean_host(0)
-    assert env["contaminated"] is True
-
-    monkeypatch.setattr(bench, "_env_conditions", fake_env(0, 0.3))
-    env = bench._await_clean_host(60)  # returns without sleeping
-    assert env["contaminated"] is False and env["waited_s"] < 5
-
-    monkeypatch.setattr(bench, "_env_conditions", fake_env(-1, -1.0))
-    env = bench._await_clean_host(60)
-    assert env["contaminated"] is False
-
-    # load1 just over the threshold with no strays -> dirty
-    monkeypatch.setattr(bench, "_env_conditions", fake_env(0, 2.5))
-    env = bench._await_clean_host(0)
-    assert env["contaminated"] is True
-
-
-def test_await_clean_host_discounts_self_inflicted_load5(monkeypatch):
-    """Round-15 ADVICE item 1: after the in-process standalone child
-    runs first, its trailing load5 is self-inflicted — the parent's
-    verdict discounts it WHEN the pre-child host was clean, records
-    the discount + the pre-child snapshot, and still gates hard on
-    strays and load1 (they catch any ongoing external workload)."""
-    import bench
-
-    def fake_env(strays, load1, load5):
-        return lambda: {
-            "stray_jvms_at_start": strays,
-            "load1_at_start": load1,
-            "load5_at_start": load5,
-        }
-
-    pre = {
-        "stray_jvms_at_start": 0,
-        "load1_at_start": 0.3,
-        "load5_at_start": 0.4,
-    }
-    # child exhaust: load5 high, load1/strays clean -> clean, recorded
-    monkeypatch.setattr(bench, "_env_conditions", fake_env(0, 0.5, 8.0))
-    env = bench._await_clean_host(0, allow_self_load5=True, pre_child_env=pre)
-    assert env["contaminated"] is False
-    assert env["load5_self_discounted"] is True
-    assert env["pre_child_env"] == pre
-    # identical readings WITHOUT the discount -> contaminated
-    env = bench._await_clean_host(0)
-    assert env["contaminated"] is True
-    # the discount never forgives load1 (an ongoing external workload)
-    monkeypatch.setattr(bench, "_env_conditions", fake_env(0, 5.0, 8.0))
-    env = bench._await_clean_host(0, allow_self_load5=True, pre_child_env=pre)
-    assert env["contaminated"] is True
-    assert "load5_self_discounted" not in env
-    # ...or stray JVMs
-    monkeypatch.setattr(bench, "_env_conditions", fake_env(2, 0.5, 8.0))
-    env = bench._await_clean_host(0, allow_self_load5=True, pre_child_env=pre)
-    assert env["contaminated"] is True
-    # a genuinely settled host banks clean without stamping a discount
-    monkeypatch.setattr(bench, "_env_conditions", fake_env(0, 0.2, 0.2))
-    env = bench._await_clean_host(0, allow_self_load5=True, pre_child_env=pre)
-    assert env["contaminated"] is False
-    assert "load5_self_discounted" not in env
-
-
-def test_compact_summary_strips_pre_child_env():
-    """The pre-child snapshot rides only in the full doc line; the
-    compact tail keeps the verdict fields."""
-    import bench
-
-    doc = {
-        "metric": "headline_queries_total",
-        "value": 1.0,
-        "unit": "sec",
-        "sf": 0.1,
-        "env": {
-            "contaminated": False,
-            "load5_self_discounted": True,
-            "pre_child_env": {"load1_at_start": 0.1},
-        },
-    }
-    compact = bench._compact_summary(doc)
-    assert "pre_child_env" not in compact["env"]
-    assert compact["env"]["load5_self_discounted"] is True
-    assert compact["env"]["contaminated"] is False
+    assert doc["extended_total"] == doc["extended"]["dedup_components"] > 0
+    assert all(s >= 0 for s in doc["extended_spread"].values())
+    assert not set(doc["extended"]) & set(doc["queries"])

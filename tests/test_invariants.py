@@ -339,7 +339,13 @@ def test_customer_quartiles_two_phase_matches_window_ntile(spark, tmp_path):
             "n_name",
             "c_custkey",
             F.ntile(4).over(w).alias("quartil"),
-            F.round(F.median("fat").over(w_n), 2).alias("mediana_nacao"),
+            (
+                F.floor(
+                    F.median(F.round(F.col("fat") * 100).cast("bigint")).over(w_n)
+                    + 0.5
+                )
+                / 100
+            ).alias("mediana_nacao"),
         ).collect()
     }
     assert got == want

@@ -13,7 +13,7 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def main() -> None:
@@ -21,20 +21,17 @@ def main() -> None:
     names = sys.argv[2:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     out_dir = os.path.join(
-        "/root/repo/plans", os.environ.get("SPARK_GRAFT_ROUND", "r17")
+        REPO, "plans", os.environ.get("SPARK_GRAFT_ROUND", "r17")
     )
     os.makedirs(out_dir, exist_ok=True)
 
+    from etl_python_spark.operators import EXTENDED, HEADLINE, all_queries
     from etl_python_spark.session import get_spark
-    from etl_python_spark.operators import all_queries
 
     spark = get_spark("dump_plans")
     spark.sparkContext.setLogLevel("ERROR")
     qs = all_queries()
-    if not names:
-        import bench
-
-        names = bench.HEADLINE + bench.EXTENDED
+    names = names or HEADLINE + EXTENDED
     for name in names:
         try:
             df = qs[name](spark, sf_dir)
@@ -49,4 +46,5 @@ def main() -> None:
 
 
 if __name__ == "__main__":
+    sys.path.insert(0, REPO)
     main()
