@@ -665,7 +665,7 @@ def q_pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     # below, where the repeated aggregate subtrees are identical and
     # cheap relative to the extra materialization job the checkpoint
     # paid (idle-host A/B: 4.93 s with the checkpoint vs 4.23 s lazy,
-    # plans/r17/probe_ckpt_ab.json; the baskets relation itself is
+    # a7cd248:plans/r17/probe_ckpt_ab.json; the baskets relation itself is
     # already checkpointed, so re-running the pair aggregate never
     # re-shuffles lineitem).
     pair_cnt = (

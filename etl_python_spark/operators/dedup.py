@@ -342,121 +342,31 @@ FROM documents d LEFT JOIN comp c USING (doc_id)
 # ---------------------------------------------------------------------------
 # Near-dup clustering: connected components over the pair graph
 # (the dedup endgame — pairs alone don't dedupe; clusters pick the
-#  canonical survivor.  Public algorithm family: iterative min-label
-#  propagation / Hash-to-Min style CC-on-MapReduce.)
+#  canonical survivor.  Public algorithm family: alternating
+#  large-star/small-star CC-on-MapReduce, Kiveris et al., SoCC 2014.)
 # ---------------------------------------------------------------------------
 
-# Kernel switch (round-8 verdict item 6).  Warm A/B on the near-dup
-# pair graph (fresh session each, min of warm runs — PLAN_AUDIT.md):
-# sf0.1 min_label 2.08 s vs star 2.57 s; sf1 (10x, replica-chained
-# clusters) min_label 14.1 s vs star 10.0 s.  The crossover is round
-# count: min_label pays O(diameter) rounds and the sf1 corpus chains
-# replicas into deeper clusters — exactly what a multi-source corpus
-# does at 100 TB — while the alternating large-star/small-star
-# contraction halves depth per round (O(log diameter); a 200-deep
-# path graph converges in <20 star rounds but needs ~199 min-label
-# rounds, pinned in tests/test_invariants.py).  Star is therefore the
-# scale default; min_label remains the cheaper kernel for graphs
-# known to be shallow.  Equality of the two kernels is pinned on real
-# pair graphs and deep chains.
-CC_ALGORITHM = "star"
-
 # Rounds the most recent connected_components() call took to converge
-# — observability for the O(log diameter) claim (round-14 verdict item
-# 3: the sf10 soak asserts the star kernel's round count stays flat at
-# 10x corpus).  Set by both kernels on successful convergence.
+# — observability for the O(log diameter) claim (pinned on a 200-deep
+# chain in tests/test_invariants.py).  Set on successful convergence.
 LAST_CC_ROUNDS: int = 0
 
 
-def connected_components(
-    edges: DataFrame, max_iter: int = 50, algorithm: str | None = None
-) -> DataFrame:
+def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
     """(doc_a, doc_b) undirected edges → (doc_id, component_id) with
-    component_id = MIN doc_id reachable.
-
-    ``algorithm`` picks the kernel (default :data:`CC_ALGORITHM`):
-
-    * ``min_label`` — iterative min-label propagation: each round
-      every vertex adopts the minimum label among itself and its
-      neighbors; convergence in ≤ graph-diameter rounds (near-dup
-      clusters are shallow — dup clusters of depth > ~5 are rare, and
-      ``max_iter`` bounds the worst case).  Each round is one join +
-      one aggregate, all keyed shuffles; the convergence check rides
-      the same aggregate via a driver-side count of changed labels
-      (one scalar per round, no data collected).
-    * ``star`` — alternating large-star/small-star contraction
-      (public MapReduce-CC family, Kiveris et al. 2014): each round
-      hangs strictly-larger neighbors off the neighborhood minimum
-      (large-star) then contracts the remaining edges onto it
-      (small-star), halving component depth per round — O(log
-      diameter) rounds for deep chains.
-
-    Both kernels checkpoint per round to truncate lineage and fail
-    loudly on non-convergence (a silent partial result would split
-    components)."""
-    if (algorithm or CC_ALGORITHM) == "star":
-        return _cc_star(edges, max_iter)
-    adj = (
-        edges.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("w"))
-        .union(edges.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("w")))
-        .distinct()
-    )
-    # Materialize the edge list ONCE: it sits on the probe side of
-    # every propagation round's join, and without this each round
-    # re-executes the entire upstream pair-generation pipeline (at ~sf1
-    # that was ~3x the pair cost paid again — measured 46 s → 17 s for
-    # the component query in the sf1 soak).  localCheckpoint also
-    # truncates the lineage the per-round checkpoints would otherwise
-    # drag along.
-    adj = adj.localCheckpoint(eager=True)
-    labels = (
-        adj.select(F.col("u").alias("v")).distinct().withColumn("lbl", F.col("v"))
-    )
-    changed = None
-    rounds = 0
-    for _ in range(max_iter):
-        rounds += 1
-        neighbor_min = (
-            adj.join(labels, adj.u == labels.v)
-            .groupBy("w")
-            .agg(F.min("lbl").alias("nmin"))
-        )
-        new_labels = (
-            labels.join(neighbor_min, labels.v == neighbor_min.w, "left")
-            .select(
-                "v",
-                F.least(F.col("lbl"), F.coalesce("nmin", "lbl")).alias("lbl"),
-                (F.coalesce("nmin", "lbl") < F.col("lbl")).cast("int").alias("chg"),
-            )
-        )
-        new_labels = new_labels.localCheckpoint(eager=True)
-        changed = new_labels.agg(F.sum("chg")).first()[0] or 0
-        labels = new_labels.select("v", "lbl")
-        if changed == 0:
-            break
-    if changed != 0:
-        # A silent non-converged result would split components (and emit
-        # clusters with no canonical member) — fail loudly instead.
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds "
-            "(pair-graph diameter exceeds the iteration budget); raise max_iter"
-        )
-    global LAST_CC_ROUNDS
-    LAST_CC_ROUNDS = rounds
-    return labels.select(F.col("v").alias("doc_id"), F.col("lbl").alias("component_id"))
-
-
-def _cc_star(edges: DataFrame, max_iter: int = 50) -> DataFrame:
-    """Alternating large-star/small-star connected components.
+    component_id = MIN doc_id reachable, by alternating
+    large-star/small-star contraction.
 
     Large-star (keyed on each vertex u over its symmetric
     neighborhood): every strictly larger neighbor re-attaches to
     m = min(N(u) ∪ {u}).  Small-star (keyed on the larger endpoint of
     each edge): all smaller neighbors and u itself attach to the
     neighborhood minimum.  Each pair of steps at least halves the
-    depth of every tree, so convergence takes O(log diameter) rounds;
-    at the fixed point the edge set is a star per component — (v,
-    root) for every non-root v — which IS the label table.
+    depth of every tree, so convergence takes O(log diameter) rounds
+    (a 200-deep path graph converges in under 20, where min-label
+    propagation needs ~199); at the fixed point the edge set is a star
+    per component — (v, root) for every non-root v — which IS the
+    label table.  Self-loop-only vertices have no component.
 
     Scale shape: both steps are one groupBy + one keyed join on the
     current edge set (which only shrinks toward star form — no
@@ -465,7 +375,10 @@ def _cc_star(edges: DataFrame, max_iter: int = 50) -> DataFrame:
     lazy-checkpointed edge set and returns the convergence scalar
     (bounded driver traffic: one long).  Skew note: after one
     round every high-degree hub IS a component minimum, so its edges
-    key on distinct smaller vertices, not one hot key."""
+    key on distinct smaller vertices, not one hot key.
+
+    Fails loudly on non-convergence within ``max_iter`` rounds (a
+    silent partial result would split components)."""
     e = (
         edges.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("w"))
         .filter(F.col("u") != F.col("w"))
@@ -515,8 +428,8 @@ def _cc_star(edges: DataFrame, max_iter: int = 50) -> DataFrame:
         # guide §1.2).  Interleaved idle-host A/B on the two benched
         # CC consumers: dedup_components 5.77 s (eager) → 4.09 s
         # (fused), fuzzy_components 4.28 → 4.07
-        # (plans/r17/probe_cc_ab.json; identical rows asserted in the
-        # same probe).
+        # (3fd71ea:plans/r17/probe_cc_ab.json; identical rows asserted
+        # in the same probe).
         small = (
             joined.filter(F.col("w") != F.col("m"))
             .select(F.col("w").alias("u"), F.col("m").alias("w"))
@@ -643,7 +556,7 @@ def materialize_dedup_endgame(
     At 100 TB this is the nightly index-build job; the endgame
     queries become pair-graph-sized joins against these snapshots
     instead of each re-running shingling + CC (~3× the family cost at
-    sf1, measured in SOAK_r11)."""
+    sf1, measured in 9925a29:SOAK_r11.json)."""
     from ..sources.fingerprint import META_KEY, corpus_fingerprint
     from ..sources.txn import txn_write
 
@@ -1015,7 +928,7 @@ def q_dedup_pairs_on_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pre-delete pair table (including rows only the discarded
     # ``changed`` output needs) for one consumer, and the idle-host
     # A/B read 4.74 s (ckpt) vs 3.64 s (lazy)
-    # (plans/r17/probe_ckpt_ab.json).
+    # (a7cd248:plans/r17/probe_ckpt_ab.json).
     base_df = (
         base_sh.groupBy("h")
         .agg(F.count("*").alias("df"))
@@ -1477,16 +1390,16 @@ def q_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the banding branch and the verification branch read the same
     materialized partitions instead of re-running the regex shingler.
     (Round 4 pruned with a semi-join + second shingle pass; the second
-    scan doubled local latency — BENCH_r04 3.77 s vs 1.89 s baseline —
-    and at 100 TB it re-reads the whole corpus.  This shape reads it
-    once, full stop.)  Banding folds each 4-row band into a bucket key;
-    docs sharing a band bucket are candidates (shuffle keyed by band
-    key, so bucket sizes — not n — drive cost); candidates carry ids
-    only, and verification joins the ids back to the checkpointed
-    per-doc sets.  Jaccard over the 60-bit hashed sets equals Jaccard
-    over the shingle strings barring md5 collisions, and the DuckDB
-    oracle computes the SAME hashed sets, so the value oracle stays
-    exact."""
+    scan doubled local latency — 43d149d:BENCH_r04.json 3.77 s vs
+    1.89 s baseline — and at 100 TB it re-reads the whole corpus.  This
+    shape reads it once, full stop.)  Banding folds each 4-row band
+    into a bucket key; docs sharing a band bucket are candidates
+    (shuffle keyed by band key, so bucket sizes — not n — drive cost);
+    candidates carry ids only, and verification joins the ids back to
+    the checkpointed per-doc sets.  Jaccard over the 60-bit hashed sets
+    equals Jaccard over the shingle strings barring md5 collisions, and
+    the DuckDB oracle computes the SAME hashed sets, so the value
+    oracle stays exact."""
     docs = load_table(spark, sf_dir, "documents")
     with_sh = with_shingles(docs)
     sh = with_sh.select("doc_id", F.explode_outer("sh").alias("shingle")).filter(

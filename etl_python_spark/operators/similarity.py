@@ -459,14 +459,14 @@ def _kmeans_emb(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _kmeans_init(emb: DataFrame) -> list[list[float]]:
-    """Deterministic init: the first K vectors by id (K×dim floats to
-    the driver — the same kilobyte-sized round-trip every Lloyd's
-    implementation does).  Ordering happens driver-side over the ≤K
-    collected rows; a DataFrame ``orderBy`` here would add a whole
-    range-partitioning exchange to sort kilobytes (guide §2.4:
-    remove shuffles used only to make output deterministic)."""
-    rows = emb.filter(F.col("vec_id") < KMEANS_K).collect()
-    return [r.v for r in sorted(rows, key=lambda r: r.vec_id)]
+    """Deterministic init: the vectors of the K smallest vec_ids
+    present, cluster id = rank (K×dim floats to the driver — the same
+    kilobyte-sized round-trip every Lloyd's implementation does).
+    Ranking present ids keeps K clusters when an id is missing.
+    ``orderBy`` + ``limit`` plans as TakeOrderedAndProject: a
+    per-partition top-K merged on the driver, with no exchange (guide
+    §2.4)."""
+    return [r.v for r in emb.orderBy("vec_id").limit(KMEANS_K).collect()]
 
 
 def _finite_nested(vals) -> bool:
@@ -663,7 +663,8 @@ WITH emb AS (
   SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
   FROM embeddings
 ), cent AS (
-  SELECT vec_id AS c_id, v AS c FROM emb WHERE vec_id < {KMEANS_K}
+  SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS c_id, v AS c
+  FROM (SELECT vec_id, v FROM emb ORDER BY vec_id LIMIT {KMEANS_K})
 ), d AS (
   SELECT e.vec_id, c.c_id,
          ROUND(list_sum(list_transform(range(1, len(e.v) + 1),
@@ -741,7 +742,7 @@ def _kmeans_fit(emb: DataFrame) -> list[list[float]]:
         assigned = _kmeans_assign(emb, centroids)
         means = assigned.groupBy("cluster").agg(mean_arr).collect()
         new_centroids = {r["cluster"]: list(r["c"]) for r in means}
-        centroids = [new_centroids.get(i, centroids[i]) for i in range(KMEANS_K)]
+        centroids = [new_centroids.get(i, c) for i, c in enumerate(centroids)]
     return centroids
 
 
@@ -845,7 +846,10 @@ def _kmeans_fit_ctes(fit_where: str = "") -> str:
 
     ``fit_where`` (e.g. ``"WHERE e.vec_id % 10 <> 9"``) restricts the
     rows the FIT sees — the incremental-maintenance oracle fits the
-    frozen model on the base slice while coding the grown corpus."""
+    frozen model on the base slice while coding the grown corpus.
+    ``cent_0`` ranks the K smallest vec_ids among those same rows,
+    mirroring :func:`_kmeans_init`."""
+    fw = f"\n  {fit_where}" if fit_where else ""
     parts = [
         f"""
 WITH emb AS (
@@ -854,11 +858,13 @@ WITH emb AS (
 ), ks AS (
   SELECT unnest(range(0, {KMEANS_K})) AS k
 ), cent_0 AS (
-  SELECT vec_id AS k, v AS c FROM emb WHERE vec_id < {KMEANS_K}
+  SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS k, v AS c FROM (
+    SELECT e.vec_id, e.v FROM emb e{fw}
+    ORDER BY e.vec_id LIMIT {KMEANS_K}
+  )
 )"""
     ]
     cur = "cent_0"
-    fw = f"\n  {fit_where}" if fit_where else ""
     for it in range(1, KMEANS_ITERS + 1):
         parts.append(
             f"""
@@ -1109,13 +1115,15 @@ FROM assigned s LEFT JOIN dup_stats d ON s.vec_id = d.id_b
 PQ_M = 8        # subspaces
 PQ_DSUB = EMB_DIM // PQ_M
 PQ_KS = 4       # codes per subspace
-PQ_SAMPLE_BASE = 200  # codebook = subvectors of vec_ids 200..203
+PQ_SAMPLE_BASE = 200  # codebook = the ks smallest vec_ids >= 200
 
 
 def _pq_codebook(
     emb: DataFrame, m_parts: int = PQ_M, ks: int = PQ_KS
 ) -> list[list[list[float]]]:
-    """codebook[m][k] = the m-th subvector of sample vector k.
+    """codebook[m][k] = the m-th subvector of sample vector k, the
+    k-th smallest vec_id >= PQ_SAMPLE_BASE present (the rank rule of
+    :func:`_kmeans_init`, which the oracles restate).
 
     Deterministic sample codebook (the same device :func:`q_ann_ivf`
     uses for its coarse centroids) so the WHOLE pipeline is restatable
@@ -1124,12 +1132,11 @@ def _pq_codebook(
     IVF×PQ index does — :func:`_pq_fit`).  ks×dim floats to the
     driver — kilobytes, same round-trip as k-means init."""
     dsub = EMB_DIM // m_parts
-    rows = sorted(
-        emb.filter(
-            (F.col("vec_id") >= PQ_SAMPLE_BASE)
-            & (F.col("vec_id") < PQ_SAMPLE_BASE + ks)
-        ).collect(),
-        key=lambda r: r.vec_id,
+    rows = (
+        emb.filter(F.col("vec_id") >= PQ_SAMPLE_BASE)
+        .orderBy("vec_id")
+        .limit(ks)
+        .collect()
     )
     return [
         [list(r.v[m * dsub : (m + 1) * dsub]) for r in rows]
@@ -1227,8 +1234,10 @@ def _sql_sub(v: str, m: str, dsub: int = PQ_DSUB) -> str:
 # identical ``emb`` definition.
 _PQ_CTES_BODY = f"""
 , cb AS (
-  SELECT vec_id - {PQ_SAMPLE_BASE} AS code, v FROM emb
-  WHERE vec_id >= {PQ_SAMPLE_BASE} AND vec_id < {PQ_SAMPLE_BASE + PQ_KS}
+  SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS code, v FROM (
+    SELECT vec_id, v FROM emb WHERE vec_id >= {PQ_SAMPLE_BASE}
+    ORDER BY vec_id LIMIT {PQ_KS}
+  )
 ), ms AS (
   SELECT unnest(range(0, {PQ_M})) AS m
 ), cbsub AS (
@@ -1525,10 +1534,11 @@ def _ivf_pq_shortlist(
     # helper) and the LUT rides the SAME narrow projection, which
     # removes the per-query rank window (one q_id exchange + sort)
     # AND the probes⋈luts join from the serve path's broadcast build
-    # (guide §2.4; idle-host A/B in plans/r17/probe_ivfpq_phases.json:
-    # the query side is N_QUERY rows, where r16's corpus-side
-    # window-beats-projection finding does not apply — there is no
-    # corpus-sized rank here to preserve).
+    # (guide §2.4; idle-host A/B in
+    # 7ff9b6a:plans/r17/probe_ivfpq_phases.json: the query side is
+    # N_QUERY rows, where r16's corpus-side window-beats-projection
+    # finding does not apply — there is no corpus-sized rank here to
+    # preserve).
     cells_sorted = _probe_cells(F.col("rv"), centroids, N_PROBE)
     lut_arr = F.flatten(
         F.transform(
@@ -1854,9 +1864,9 @@ def refresh_ann_index_incremental(
 # ---------------------------------------------------------------------------
 
 # The "newly arrived" slice: 1% of the corpus, chosen OFF the model's
-# deterministic sample ids (k-means init = vec_ids 0..7, PQ codebook
-# init = vec_ids 200..215) so the base-only fit sees the exact sample
-# rows the full-corpus fit would.
+# deterministic sample ids (k-means init = the 8 smallest vec_ids, PQ
+# codebook init = the 16 smallest from 200) so the base-only fit sees
+# the exact sample rows the full-corpus fit would.
 ANN_DELTA_MOD, ANN_DELTA_REM = 100, 97
 
 
@@ -2173,7 +2183,9 @@ def _pq_fit_ctes(fit_where: str = "") -> str:
     ``fit_where`` (e.g. ``"WHERE s.vec_id % 10 <> 9"``) restricts the
     rows the FIT iterations see while the final coding CTEs still
     cover the whole corpus — the frozen-model contract of
-    :func:`q_ann_index_incremental`."""
+    :func:`q_ann_index_incremental`.  ``pqcent_0`` ranks the sample
+    ids among those same rows, mirroring :func:`_pq_codebook`."""
+    fw = f"\n  {fit_where}" if fit_where else ""
     parts = [
         f"""
 , uemb AS (
@@ -2192,17 +2204,20 @@ def _pq_fit_ctes(fit_where: str = "") -> str:
   SELECT e.vec_id, pqms.m, {_sql_sub('e.v', 'pqms.m', IVFPQ_DSUB)} AS s
   FROM uemb e CROSS JOIN pqms
 ), pqcent_0 AS (
-  SELECT pqms.m, e.vec_id - {PQ_SAMPLE_BASE} AS code,
-         {_sql_sub('e.v', 'pqms.m', IVFPQ_DSUB)} AS cs
-  FROM uemb e CROSS JOIN pqms
-  WHERE e.vec_id >= {PQ_SAMPLE_BASE} AND e.vec_id < {PQ_SAMPLE_BASE + IVFPQ_KS}
+  SELECT pqms.m, e.code, {_sql_sub('e.v', 'pqms.m', IVFPQ_DSUB)} AS cs
+  FROM (
+    SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS code, v FROM (
+      SELECT s.vec_id, s.v
+      FROM (SELECT * FROM uemb WHERE vec_id >= {PQ_SAMPLE_BASE}) s{fw}
+      ORDER BY s.vec_id LIMIT {IVFPQ_KS}
+    )
+  ) e CROSS JOIN pqms
 )"""
     ]
     d2 = (
         f"ROUND(list_sum(list_transform(range(1, {IVFPQ_DSUB} + 1), "
         f"i -> (s.s[i] - c.cs[i]) * (s.s[i] - c.cs[i]))), 6)"
     )
-    fw = f"\n  {fit_where}" if fit_where else ""
     for it in range(1, PQ_FIT_ITERS + 1):
         prev = f"pqcent_{it - 1}"
         parts.append(

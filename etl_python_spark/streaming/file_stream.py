@@ -402,13 +402,13 @@ WHERE doc_id % 10 >= 8
 
 
 #: Default cap on stored members per LSH bucket (the stream-state
-#: compaction policy, round-11 verdict item 4).  Overridable via
-#: ``SPARK_GRAFT_NEARDUP_MAX_BUCKET``; ``0`` disables the cap.
+#: compaction policy, round-11 verdict item 4); ``max_members=0``
+#: disables the cap.
 NEARDUP_MAX_BUCKET = 64
 
 
 def neardup_pairs_stream(
-    banded: DataFrame, max_members: int | None = None
+    banded: DataFrame, max_members: int = NEARDUP_MAX_BUCKET
 ) -> DataFrame:
     """The stateful core of streaming near-dup detection: group the
     per-row MinHash band stream (``operators.dedup.minhash_band_stream``)
@@ -439,11 +439,6 @@ def neardup_pairs_stream(
     and the compaction job runs on the batch engine where a hot
     bucket's pair join shuffles instead of growing pickled state."""
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    if max_members is None:
-        max_members = int(
-            os.environ.get("SPARK_GRAFT_NEARDUP_MAX_BUCKET", NEARDUP_MAX_BUCKET)
-        )
 
     def bucket_pairs(key, pdfs, state: GroupState):
         import pickle

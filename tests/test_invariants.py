@@ -108,47 +108,68 @@ def test_heaps_and_zipf_plausible_on_real_corpus(spark):
         assert h.vocab_size <= h.total_tokens, h
 
 
-def test_cc_star_equals_min_label_on_real_pair_graph(spark):
-    """Round-8 verdict item 6: the two CC kernels must be
-    interchangeable — identical (doc_id, component_id) sets on the
-    real near-dup pair graph."""
+def _union_find_components(edges) -> dict:
+    """Pure-Python reference CC: {doc_id: min doc_id of its component}
+    over the non-self-loop edges (a vertex with only a self-loop has
+    no component, as in the Spark kernel)."""
+    parent: dict = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        if a == b:
+            continue
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {v: find(v) for v in parent}
+
+
+def _cc_dict(df) -> dict:
+    rows = df.collect()
+    got = {r.doc_id: r.component_id for r in rows}
+    assert len(got) == len(rows), "a doc_id appears in two components"
+    return got
+
+
+def test_cc_star_equals_union_find_on_real_pair_graph(spark):
+    """The CC kernel matches a pure-Python union-find on the real
+    near-dup pair graph."""
     from etl_python_spark.operators.dedup import (
         connected_components,
         q_ngram_jaccard_pairs,
     )
 
     pairs = q_ngram_jaccard_pairs(spark, SF_SMOKE).select("doc_a", "doc_b")
-    a = sorted(
-        map(tuple, connected_components(pairs, algorithm="min_label").collect())
-    )
-    b = sorted(
-        map(tuple, connected_components(pairs, algorithm="star").collect())
-    )
-    assert a == b and len(a) > 0
+    want = _union_find_components(map(tuple, pairs.collect()))
+    assert len(want) > 0
+    assert _cc_dict(connected_components(pairs)) == want
 
 
 def test_cc_star_converges_logarithmically_on_deep_chain(spark):
-    """A 200-vertex path graph has diameter 199: min-label needs ~199
-    rounds (it would blow a 20-round budget), while the alternating
-    star kernel halves depth per round and must finish inside 20 —
-    the O(log d) bound that motivates the switch."""
+    """A 200-vertex path graph has diameter 199: min-label propagation
+    would need ~199 rounds, while the alternating star kernel halves
+    depth per round and must finish inside 20 — the O(log d) bound.
+    Too small a budget raises instead of splitting components."""
     import pytest
 
+    from etl_python_spark.operators import dedup as dedup_mod
     from etl_python_spark.operators.dedup import connected_components
 
     n = 200
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(n - 1)], "doc_a long, doc_b long"
-    )
-    out = connected_components(chain, max_iter=20, algorithm="star").collect()
-    assert len(out) == n
-    assert all(r.component_id == 0 for r in out)
-    # round observability (round-14 verdict item 3: the sf10 soak
-    # asserts this counter stays flat at 10x corpus): the star kernel
-    # reports its convergence rounds, and a 199-diameter chain needs
-    # more than the 1-2 a shallow star graph takes but far under 20
-    from etl_python_spark.operators import dedup as dedup_mod
-
+    edges = [(i, i + 1) for i in range(n - 1)]
+    chain = spark.createDataFrame(edges, "doc_a long, doc_b long")
+    got = _cc_dict(connected_components(chain, max_iter=20))
+    assert got == _union_find_components(edges)
+    assert len(got) == n and set(got.values()) == {0}
+    # round observability: a 199-diameter chain needs more than the
+    # 1-2 rounds a shallow star graph takes but far under 20
     star_rounds = dedup_mod.LAST_CC_ROUNDS
     assert 2 <= star_rounds <= 20, star_rounds
     # a shallow graph (one star) converges in fewer rounds than the
@@ -156,32 +177,29 @@ def test_cc_star_converges_logarithmically_on_deep_chain(spark):
     shallow = spark.createDataFrame(
         [(0, i) for i in range(1, 50)], "doc_a long, doc_b long"
     )
-    connected_components(shallow, max_iter=20, algorithm="star").collect()
-    assert dedup_mod.LAST_CC_ROUNDS <= star_rounds
-    # min_label sets it too (its rounds ≈ diameter)
-    connected_components(shallow, max_iter=20, algorithm="min_label").collect()
-    assert 1 <= dedup_mod.LAST_CC_ROUNDS <= 3
+    connected_components(shallow, max_iter=20).collect()
+    assert 1 <= dedup_mod.LAST_CC_ROUNDS <= star_rounds
+    # one round short of the chain's need fails loudly
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(chain, max_iter=20, algorithm="min_label")
+        connected_components(chain, max_iter=star_rounds - 1)
 
 
 def test_cc_star_handles_multi_component_graphs(spark):
     """Separate clusters, reversed/duplicated edges, self-loop noise."""
     from etl_python_spark.operators.dedup import connected_components
 
-    edges = spark.createDataFrame(
-        [
-            (5, 3), (3, 9),          # component min 3
-            (20, 21), (21, 20),      # duplicate + reversed, min 20
-            (7, 7),                  # self-loop only: dropped entirely
-            (40, 41), (41, 42), (42, 43), (43, 44),  # chain, min 40
-        ],
-        "doc_a long, doc_b long",
+    edges = [
+        (5, 3), (3, 9),          # component min 3
+        (20, 21), (21, 20),      # duplicate + reversed, min 20
+        (7, 7),                  # self-loop only: dropped entirely
+        (40, 41), (41, 42), (42, 43), (43, 44),  # chain, min 40
+    ]
+    got = _cc_dict(
+        connected_components(
+            spark.createDataFrame(edges, "doc_a long, doc_b long")
+        )
     )
-    got = {
-        r.doc_id: r.component_id
-        for r in connected_components(edges, algorithm="star").collect()
-    }
+    assert got == _union_find_components(edges)
     assert got == {
         3: 3, 5: 3, 9: 3,
         20: 20, 21: 20,

@@ -99,7 +99,7 @@ def test_minhash_single_corpus_pass(spark):
     # localCheckpoint; everything downstream (banding, candidate join,
     # verification) must read the checkpointed relation — a parquet
     # scan in the final plan means the round-4 double shingle-pass
-    # (BENCH_r04: 3.77 s vs 1.89 s baseline) has crept back.
+    # (43d149d:BENCH_r04.json: 3.77 s vs 1.89 s baseline) has crept back.
     assert "parquet" not in plan.lower()
     assert plan.count("Scan ExistingRDD") >= 1
 

@@ -60,6 +60,38 @@ def test_pq_invariants(spark):
 
 
 @pytest.mark.parametrize(
+    "name,missing",
+    [("kmeans_assign", 3), ("kmeans_embeddings", 3), ("pq_codes", 201)],
+)
+def test_sample_init_matches_oracle_with_an_id_missing(
+    spark, tmp_path, name, missing
+):
+    """The k-means init seeds from the K smallest vec_ids PRESENT and
+    the PQ codebook from the KS smallest >= PQ_SAMPLE_BASE, id = rank,
+    on both engines.  With vec_id 3 gone, a ``vec_id < K`` init seeded
+    only K-1 centroids (the Lloyd update then indexed past them) while
+    the oracle dropped a cluster; with 201 gone, the two engines
+    numbered the PQ codes differently."""
+    import duckdb
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    emb = pq.read_table(f"{SF_SMOKE}/embeddings.parquet")
+    emb = emb.filter(pc.not_equal(emb["vec_id"], missing))
+    path = str(tmp_path / "embeddings.parquet")
+    pq.write_table(emb, path)
+
+    df = QUERIES[name](spark, str(tmp_path))
+    sp_rows = df.collect()
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW embeddings AS SELECT * FROM '{path}'")
+    rel = con.sql(ORACLES[name])
+    problems = compare(df.columns, sp_rows, rel.columns, rel.types, rel.fetchall())
+    assert not problems, f"{name}: {'; '.join(problems)}"
+    assert len(sp_rows) > 1
+
+
+@pytest.mark.parametrize(
     "name",
     ["incremental_dedup", "shard_balance", "outlier_events", "dedup_keep_best",
      "leakage_safe_split", "walk_forward_split", "mad_outliers",

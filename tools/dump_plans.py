@@ -1,8 +1,8 @@
-"""Dump .explain("formatted") for benched queries into plans/<round>/.
+"""Dump .explain("formatted") for benched queries into plans/.
 
 Usage: python tools/dump_plans.py <suffix> [query ...]
-  suffix: e.g. "before" or "after" -> plans/$SPARK_GRAFT_ROUND/<query>_<suffix>.txt
-  (round dir defaults to r17)
+  suffix: e.g. "before" or "after" -> plans/<query>_<suffix>.txt
+  (plans/ is gitignored: dumps are for diffing, not for banking)
 
 Only builds the DataFrame and formats the plan — no job execution —
 so it is safe to run alongside other workloads.
@@ -20,9 +20,7 @@ def main() -> None:
     suffix = sys.argv[1]
     names = sys.argv[2:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    out_dir = os.path.join(
-        REPO, "plans", os.environ.get("SPARK_GRAFT_ROUND", "r17")
-    )
+    out_dir = os.path.join(REPO, "plans")
     os.makedirs(out_dir, exist_ok=True)
 
     from etl_python_spark.operators import EXTENDED, HEADLINE, all_queries

@@ -1,33 +1,20 @@
-"""sf1 scale soak (round-6 verdict item 5): synthesize ~10x the sf0.1
-testdata locally (key-remapped replicas; near-duplicate text
-perturbation so dedup faces realistic near-dup clusters instead of
-byte-identical copies), then run the dedup/ANN/curation family and the
-most expensive headline queries against it, reporting warm times and
-plan observations.
+"""sf1 scale corpus: synthesize ~10x the sf0.1 testdata locally
+(key-remapped replicas; near-duplicate text perturbation so dedup
+faces realistic near-dup clusters instead of byte-identical copies).
 
 Usage:
-    python tools/soak_sf1.py build   # write /tmp/sf1 (10x sf0.1)
-    python tools/soak_sf1.py run [--full] [--out FILE] [--baseline FILE]
-        --full      run the ENTIRE queries() inventory (round playbook:
-                    every round — catches layout/scale bugs the oracle
-                    gates cannot; found 2 real bugs in round 7)
-        --out       bank per-query times as JSON (SOAK_r{N}.json)
-        --baseline  previous round's soak file; warm times that regress
-                    past 2x AND +2s absolute raise the alarm (exit 1)
-    python tools/soak_sf1.py endgame [--out FILE]
-    python tools/soak_sf1.py ann [--out FILE]
-    python tools/soak_sf1.py retention [--with-deletes] [--cycles N] [--out FILE]
-        --with-deletes  run the right-to-be-forgotten loop (purge ->
-                    delete-refresh -> vacuum -> restore) per cycle
-                    under a flip-following concurrent reader
+    python tools/soak_sf1.py build   # write $SOAK_DST (default /tmp/sf1)
+
+Time queries on it with ``SPARK_GRAFT_SF_DIR=/tmp/sf1 python bench.py
+<query ...>``.  ``perfbench/gen.py`` runs ``build`` with
+``SOAK_SRC``/``SOAK_DST``/``SOAK_REPLICAS`` set to make the
+``star_sf0.1`` inputs.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -35,83 +22,11 @@ SRC = os.environ.get("SOAK_SRC", "/root/testdata/sf0.1")
 DST = os.environ.get("SOAK_DST", "/tmp/sf1")
 REPLICAS = int(os.environ.get("SOAK_REPLICAS", "10"))
 
-SOAK_QUERIES = [
-    # dedup family (near-dup clusters of ~REPLICAS copies per doc)
-    "dedup_exact",
-    "ngram_jaccard_pairs",
-    "minhash_lsh_pairs",
-    "simhash",
-    "dedup_components",
-    # ANN / embedding family (duplicated points, 10x corpus)
-    "ann_bruteforce",
-    "ann_ivf",
-    "ann_ivf_fitted",
-    "kmeans_embeddings",
-    "semantic_dedup",
-    # curation family (broadcast guards, gram joins)
-    "decontaminate",
-    "lm_perplexity",
-    "curation_pipeline",
-    "token_budget_mix",
-    # most expensive headline analytics at sf0.1
-    "pricing_summary",
-    "faturamento_rollup",
-    "top_customers_per_nation",
-    "supplier_region_share",
-    "sla_leadtime",
-]
 
-
-def _session(warm: bool = False):
+def _session():
     from etl_python_spark.session import get_spark
 
-    spark = get_spark(app_name="soak_sf1")
-    if warm:
-        # bench.py's session warm-up, ported (round 11): fork the
-        # Python worker pool (one per core, reused across queries) and
-        # JIT the md5/conv digest path BEFORE any timed query needs
-        # them.  Without this, whichever stateful/Pandas-UDF query
-        # lands first in a chunk pays the pool fork inside its timing
-        # (r11: stream_user_totals "warm" 4.5 s in chunk context vs
-        # 3.1 s standalone — a measurement artifact, not a
-        # regression; standalone A/B in PLAN_AUDIT.md).
-        from pyspark.sql import functions as F
-
-        sc = spark.sparkContext
-        spark.range(sc.defaultParallelism * 4).repartition(
-            sc.defaultParallelism
-        ).mapInPandas(lambda it: it, "id long").count()
-        spark.range(200_000).repartition(sc.defaultParallelism).select(
-            F.sum(
-                F.conv(
-                    F.substring(F.md5(F.col("id").cast("string")), 1, 15),
-                    16,
-                    10,
-                )
-                .cast("long")
-                % 1_000_000_007
-            )
-        ).count()
-        # round-14 (r13 verdict item 5): warm the regex/substring/
-        # try_cast codegen family the cnpj/mod-11 validators compile —
-        # three consecutive rounds burned the soak adjudication path on
-        # cnpj_validate's first-in-chunk JIT (r13: 5.87 s in-sweep vs
-        # 0.92 s standalone).  Run the REAL expression once so the
-        # regex engine, UTF8String substring paths and the unrolled
-        # weighted-sum ladder are C2-compiled before any timed query.
-        from etl_python_spark.functions.cleaning import cnpj_check_digit_ok
-
-        spark.range(50_000).repartition(sc.defaultParallelism).select(
-            F.sum(
-                cnpj_check_digit_ok(
-                    F.concat(
-                        F.lit("11.222.333/0001-"),
-                        F.lpad((F.col("id") % 100).cast("string"), 2, "0"),
-                    )
-                ).cast("int")
-            )
-        ).count()
-    return spark
+    return get_spark(app_name="soak_sf1")
 
 
 def build() -> None:
@@ -167,905 +82,13 @@ def build() -> None:
         print(f"{t}: {n} rows")
 
 
-CHUNK = 40  # queries per JVM in the full sweep
-
-
-def run(
-    full: bool = False,
-    out_path: str | None = None,
-    baseline_path: str | None = None,
-    names_csv: str | None = None,
-) -> int:
-    import __spark_entry__ as entrymod
-
-    qs = entrymod.queries()
-    if names_csv:
-        names = [n for n in names_csv.split(",") if n]
-    elif full:
-        names = list(qs)
-    else:
-        names = SOAK_QUERIES
-
-    # The full sweep runs in CHUNK-sized child JVMs: a single ~130-query
-    # session at the measured-fast 8g heap eventually dies of
-    # accumulated BlockManager/codegen state (observed twice), and a
-    # bigger heap trades the crash for the documented G1 pathology
-    # (16g: ann_ivf 1.25s -> 21s).  Bounded sessions keep BOTH the fast
-    # heap and the crash margin; per-query semantics are unchanged.
-    if full and names_csv is None:
-        import subprocess
-        import tempfile
-
-        merged: dict = {}
-        failures = 0
-        for i in range(0, len(names), CHUNK):
-            chunk = names[i : i + CHUNK]
-            with tempfile.TemporaryDirectory(prefix="soak_chunk_") as td:
-                sub_out = os.path.join(td, "chunk.json")
-                proc = subprocess.run(
-                    [
-                        sys.executable, os.path.abspath(__file__), "run",
-                        "--names", ",".join(chunk), "--out", sub_out,
-                    ],
-                    text=True,
-                )
-                if os.path.exists(sub_out):
-                    merged.update(json.load(open(sub_out)).get("results", {}))
-                else:  # child died before writing: record the whole chunk
-                    failures += len(chunk)
-                    for n in chunk:
-                        merged[n] = {
-                            "error": f"chunk crashed (rc={proc.returncode})"
-                        }
-        failures += sum(1 for r in merged.values() if "error" in r)
-        return _finish(merged, failures, full, out_path, baseline_path)
-
-    spark = _session(warm=True)
-    results = {}
-    failures = 0
-    for name in names:
-        fn = qs[name]
-        t0 = time.time()
-        try:
-            df = fn(spark, DST)
-            n = df.count()
-            warm = time.time() - t0
-            t1 = time.time()
-            n = fn(spark, DST).count()
-            timed = time.time() - t1
-            results[name] = {"rows": n, "cold_s": round(warm, 2), "warm_s": round(timed, 2)}
-            print(f"ok   {name}: rows={n} cold={warm:.2f}s warm={timed:.2f}s", flush=True)
-        except Exception as e:  # record, keep soaking
-            failures += 1
-            results[name] = {"error": f"{type(e).__name__}: {e}"}
-            print(f"FAIL {name}: {type(e).__name__}: {e}", flush=True)
-        # the session lives across ~130 queries; localCheckpointed
-        # relations (dedup/similarity) hold BlockManager memory until
-        # the Python refs die AND the ContextCleaner runs — without an
-        # explicit collect the 8g heap eventually OOMs late in the
-        # sweep (observed on dedup_components ~query 80)
-        import gc
-
-        df = None
-        gc.collect()
-        try:
-            spark.catalog.clearCache()
-        except Exception:
-            pass
-        # clearCache only empties the SQL cache manager; the
-        # localCheckpoint blocks live as PERSISTENT RDDS and waiting
-        # on gc + ContextCleaner is best-effort — round 13's window
-        # rotation reshuffled the chunk composition and one chunk's
-        # accumulated blocks OOMed the 8g heap on dedup_components
-        # (which runs clean standalone).  Drop them deterministically:
-        # no query depends on another query's checkpointed blocks.
-        try:
-            for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-                rdd.unpersist()
-        except Exception:
-            pass
-
-    return _finish(results, failures, full, out_path, baseline_path)
-
-
-ENDGAME_QUERIES = [
-    "dedup_components",
-    "dedup_keep_canonical",
-    "dedup_keep_best",
-    "leakage_safe_split",
-    "dedup_source_matrix",
-]
-
-
-def _canon_hash(df):
-    """Order-insensitive content hash of a result (column-sorted,
-    row-sorted, stringified) — the byte-identity check for the
-    materialized-endgame variant."""
-    import hashlib
-
-    cols = sorted(df.columns)
-    rows = sorted(tuple(str(r[c]) for c in cols) for r in df.collect())
-    return hashlib.sha256(repr(rows).encode()).hexdigest(), len(rows)
-
-
-def endgame(out_path: str | None = None) -> int:
-    """Materialized-endgame soak variant (round-10 verdict item 5):
-    txn-publish the pair graph + component labels ONCE at sf1, then
-    run the 5-query endgame family inline vs cached.  Byte-identical
-    hashes are REQUIRED (exit 1 otherwise); the report banks the
-    per-query warm times, the one-off build cost, and the family
-    speedup — the number that justifies running the nightly
-    materialization job at 100 TB."""
-    import shutil
-
-    import __spark_entry__ as entrymod
-
-    from etl_python_spark.operators.dedup import (
-        DEDUP_CACHE_ENV,
-        materialize_dedup_endgame,
-    )
-
-    spark = _session(warm=True)
-    qs = entrymod.queries()
-    root = "/tmp/sf1_dedup_cache"
-    shutil.rmtree(root, ignore_errors=True)
-    t0 = time.time()
-    materialize_dedup_endgame(spark, DST, root)
-    build_s = round(time.time() - t0, 2)
-    print(f"materialize: {build_s}s -> {root}", flush=True)
-
-    def family(tag: str) -> dict:
-        out = {}
-        for name in ENDGAME_QUERIES:
-            fn = qs[name]
-            fn(spark, DST).count()  # warm pass (codegen, broadcasts)
-            t1 = time.time()
-            h, n = _canon_hash(fn(spark, DST))
-            out[name] = {
-                "warm_s": round(time.time() - t1, 2),
-                "rows": n,
-                "hash": h,
-            }
-            print(
-                f"{tag:7s} {name}: rows={n} warm={out[name]['warm_s']}s",
-                flush=True,
-            )
-        return out
-
-    inline = family("inline")
-    os.environ[DEDUP_CACHE_ENV] = root
-    try:
-        cached = family("cached")
-    finally:
-        del os.environ[DEDUP_CACHE_ENV]
-
-    mismatches = [
-        n for n in ENDGAME_QUERIES if inline[n]["hash"] != cached[n]["hash"]
-    ]
-    tot_inline = round(sum(r["warm_s"] for r in inline.values()), 2)
-    tot_cached = round(sum(r["warm_s"] for r in cached.values()), 2)
-    doc = {
-        "sf": "~1 (10x sf0.1)",
-        "materialize_s": build_s,
-        "inline": inline,
-        "cached": cached,
-        "family_inline_s": tot_inline,
-        "family_cached_s": tot_cached,
-        "speedup": round(tot_inline / tot_cached, 2) if tot_cached else None,
-        "hash_mismatches": mismatches,
-    }
-    if out_path:
-        with open(out_path, "w") as f:
-            json.dump(doc, f, indent=1, sort_keys=True)
-        print(f"banked -> {out_path}", flush=True)
-    else:
-        print(json.dumps(doc, indent=1, sort_keys=True))
-    print(
-        f"endgame family: inline {tot_inline}s vs cached {tot_cached}s "
-        f"(+{build_s}s one-off build); mismatches: {mismatches}",
-        flush=True,
-    )
-    return 1 if mismatches else 0
-
-
-ANN_QUERIES = ["ivf_pq_search", "ivf_pq_recall"]
-
-
-def ann(out_path: str | None = None) -> int:
-    """Materialized-ANN-index soak variant (round 11): txn-publish the
-    fitted model + corpus codes ONCE at sf1, then run the IVF×PQ
-    queries inline vs cached.  Byte-identical hashes REQUIRED; banks
-    warm times, the one-off build cost, and the serve-side speedup."""
-    import shutil
-
-    import __spark_entry__ as entrymod
-
-    from etl_python_spark.operators.similarity import (
-        ANN_CACHE_ENV,
-        materialize_ann_index,
-    )
-
-    spark = _session(warm=True)
-    qs = entrymod.queries()
-    root = "/tmp/sf1_ann_cache"
-    shutil.rmtree(root, ignore_errors=True)
-    t0 = time.time()
-    materialize_ann_index(spark, DST, root)
-    build_s = round(time.time() - t0, 2)
-    print(f"materialize: {build_s}s -> {root}", flush=True)
-
-    def family(tag: str) -> dict:
-        out = {}
-        for name in ANN_QUERIES:
-            fn = qs[name]
-            fn(spark, DST).count()  # warm pass
-            t1 = time.time()
-            h, n = _canon_hash(fn(spark, DST))
-            out[name] = {
-                "warm_s": round(time.time() - t1, 2),
-                "rows": n,
-                "hash": h,
-            }
-            print(
-                f"{tag:7s} {name}: rows={n} warm={out[name]['warm_s']}s",
-                flush=True,
-            )
-        return out
-
-    inline = family("inline")
-    os.environ[ANN_CACHE_ENV] = root
-    try:
-        cached = family("cached")
-    finally:
-        del os.environ[ANN_CACHE_ENV]
-
-    mismatches = [
-        n for n in ANN_QUERIES if inline[n]["hash"] != cached[n]["hash"]
-    ]
-    tot_inline = round(sum(r["warm_s"] for r in inline.values()), 2)
-    tot_cached = round(sum(r["warm_s"] for r in cached.values()), 2)
-    doc = {
-        "sf": "~1 (10x sf0.1)",
-        "materialize_s": build_s,
-        "inline": inline,
-        "cached": cached,
-        "family_inline_s": tot_inline,
-        "family_cached_s": tot_cached,
-        "speedup": round(tot_inline / tot_cached, 2) if tot_cached else None,
-        "hash_mismatches": mismatches,
-    }
-    if out_path:
-        with open(out_path, "w") as f:
-            json.dump(doc, f, indent=1, sort_keys=True)
-        print(f"banked -> {out_path}", flush=True)
-    else:
-        print(json.dumps(doc, indent=1, sort_keys=True))
-    print(
-        f"ann family: inline {tot_inline}s vs cached {tot_cached}s "
-        f"(+{build_s}s one-off build); mismatches: {mismatches}",
-        flush=True,
-    )
-    return 1 if mismatches else 0
-
-
-def retention(out_path: str | None = None, cycles: int = 3) -> int:
-    """Vacuum/retention soak for the snapshot-cache roots (round-11
-    verdict item 7): run the REAL refresh loop ``cycles`` times at sf1
-    for both cache families, vacuuming with a retention window after
-    every publish, while a concurrent reader hammers the cached serve
-    path.  Requires (exit 1 otherwise):
-
-    - the windowed vacuum reclaims NOTHING younger than the window;
-    - the reader never errors and every result it sees is
-      byte-identical (the atomic-publish + retention contract);
-    - after aging versions past the window, vacuum reclaims down to
-      exactly the live snapshot and disk returns to ~single-version
-      size (banked as steady-state usage — the number that says the
-      nightly refresh cycle does not leak disk)."""
-    import shutil
-    import threading
-    from pathlib import Path
-
-    import __spark_entry__ as entrymod
-
-    from etl_python_spark.operators.dedup import (
-        DEDUP_CACHE_ENV,
-        materialize_dedup_endgame,
-    )
-    from etl_python_spark.operators.similarity import (
-        ANN_CACHE_ENV,
-        materialize_ann_index,
-    )
-    from etl_python_spark.sources.txn import read_commit, vacuum_root
-
-    spark = _session(warm=True)
-    qs = entrymod.queries()
-
-    def du(root):
-        return sum(
-            f.stat().st_size for f in Path(root).rglob("*") if f.is_file()
-        )
-
-    def backdate(root, seconds=7200.0):
-        past = time.time() - seconds
-        for table in Path(root).iterdir():
-            if table.is_dir():
-                for v in table.iterdir():
-                    if v.name.startswith("v-"):
-                        os.utime(v, (past, past))
-
-    def vdirs(table):
-        return {
-            p.name for p in Path(table).iterdir() if p.name.startswith("v-")
-        }
-
-    families = [
-        ("ann", "/tmp/sf1_ann_retention", materialize_ann_index,
-         ANN_CACHE_ENV, "ivf_pq_search"),
-        ("dedup", "/tmp/sf1_dedup_retention", materialize_dedup_endgame,
-         DEDUP_CACHE_ENV, "dedup_components"),
-    ]
-    doc, violations = {"sf": "~1 (10x sf0.1)", "cycles": cycles}, []
-    for name, root, build, env, query in families:
-        shutil.rmtree(root, ignore_errors=True)
-        t0 = time.time()
-        build(spark, DST, root)
-        first = {"build_s": round(time.time() - t0, 2), "bytes": du(root)}
-        print(f"{name}: cycle 1 build {first['build_s']}s "
-              f"{first['bytes']:,}B", flush=True)
-
-        os.environ[env] = root
-        rep = {"first_cycle": first, "cycles": [], "reader": {}}
-        try:
-            baseline = _canon_hash(qs[query](spark, DST))
-            results, errors, stop = [], [], threading.Event()
-
-            def reader():
-                while not stop.is_set():
-                    try:
-                        results.append(_canon_hash(qs[query](spark, DST)))
-                    except Exception as e:  # noqa: BLE001 — the gate
-                        errors.append(repr(e))
-                        return
-
-            t = threading.Thread(target=reader, daemon=True)
-            t.start()
-            try:
-                for c in range(2, cycles + 1):
-                    t1 = time.time()
-                    build(spark, DST, root)
-                    # snapshot every version dir's mtime BEFORE the
-                    # vacuum: a reclaimed dir older than the window is
-                    # a LEGITIMATE age-out (a slow sf1 cycle can exceed
-                    # 600s), only a younger one is a retention
-                    # violation (round-12 ADVICE)
-                    mtimes = {
-                        (t.name, v.name): v.stat().st_mtime
-                        for t in Path(root).iterdir() if t.is_dir()
-                        for v in t.iterdir() if v.name.startswith("v-")
-                    }
-                    now = time.time()
-                    removed = vacuum_root(spark, root, min_age_seconds=600)
-                    young = [
-                        f"{t}/{d}"
-                        for t, ds in removed.items()
-                        for d in ds
-                        if now - mtimes.get((t, d), now) < 600
-                    ]
-                    cyc = {
-                        "build_s": round(time.time() - t1, 2),
-                        "bytes": du(root),
-                        "windowed_vacuum_removed": removed,
-                    }
-                    rep["cycles"].append(cyc)
-                    print(f"{name}: cycle {c} build {cyc['build_s']}s "
-                          f"{cyc['bytes']:,}B removed={removed}", flush=True)
-                    if young:
-                        violations.append(
-                            f"{name}: windowed vacuum reclaimed young "
-                            f"versions: {young}"
-                        )
-            finally:
-                stop.set()
-                t.join(timeout=600)
-            rep["reader"] = {
-                "iterations": len(results),
-                "errors": errors,
-                "all_identical": all(r == baseline for r in results),
-            }
-            if errors:
-                violations.append(f"{name}: reader errored: {errors[:1]}")
-            if not results:
-                violations.append(f"{name}: reader finished 0 queries")
-            if not rep["reader"]["all_identical"]:
-                violations.append(f"{name}: reader saw a divergent result")
-
-            backdate(root)
-            rep["aged_vacuum_removed"] = vacuum_root(
-                spark, root, min_age_seconds=3600
-            )
-            for table in (p.name for p in Path(root).iterdir() if p.is_dir()):
-                live = set(read_commit(spark, f"{root}/{table}")["dirs"])
-                if vdirs(f"{root}/{table}") != live:
-                    violations.append(
-                        f"{name}/{table}: leftover dirs != live snapshot"
-                    )
-            rep["steady_state_bytes"] = du(root)
-            rep["steady_vs_first"] = round(
-                rep["steady_state_bytes"] / first["bytes"], 3
-            )
-            if rep["steady_state_bytes"] > 1.2 * first["bytes"]:
-                violations.append(
-                    f"{name}: steady-state disk {rep['steady_state_bytes']:,}B"
-                    f" > 1.2x first-cycle {first['bytes']:,}B"
-                )
-            if _canon_hash(qs[query](spark, DST)) != baseline:
-                violations.append(f"{name}: post-vacuum serve != baseline")
-            print(f"{name}: steady state {rep['steady_state_bytes']:,}B "
-                  f"({rep['steady_vs_first']}x first cycle), reader "
-                  f"{len(results)} its, {len(errors)} errors", flush=True)
-        finally:
-            del os.environ[env]
-        doc[name] = rep
-
-    doc["violations"] = violations
-    if out_path:
-        with open(out_path, "w") as f:
-            json.dump(doc, f, indent=1, sort_keys=True)
-        print(f"banked -> {out_path}", flush=True)
-    else:
-        print(json.dumps(doc, indent=1, sort_keys=True))
-    for v in violations:
-        print(f"VIOLATION {v}", flush=True)
-    return 1 if violations else 0
-
-
-def retention_deletes(out_path: str | None = None, cycles: int = 3) -> int:
-    """Delete-cycle retention soak (round-12 verdict item 4 — the
-    takedown path the growth-only ``retention`` soak never drove at
-    scale): run the full right-to-be-forgotten loop ``cycles`` times
-    at sf1 for both cache families — purge (shrunk corpus) →
-    ``refresh_*_on_delete`` → windowed vacuum → restore (full-corpus
-    rebuild, the growth refresh) → windowed vacuum — under a
-    CONCURRENT reader that follows the corpus flips.  Requires (exit
-    1 otherwise):
-
-    - the reader NEVER sees a wrong result: every read issued and
-      finished outside a flip window is byte-identical to the INLINE
-      (cache-free) baseline of the corpus it queried;
-    - the only tolerated reader exception is ``StaleSnapshotError``
-      overlapping a flip window — the guard refusing a mixed-version
-      serve is the designed behavior; a stale refusal with no flip in
-      flight is a violation;
-    - the windowed vacuum reclaims nothing YOUNGER than the window
-      (legitimate age-outs of slow cycles are fine — mtime-checked);
-    - after aging every version past the window, vacuum reclaims to
-      exactly the live snapshot and steady-state disk stays at
-      ~single-version size (the delete loop must not leak disk)."""
-    import shutil
-    import threading
-    from pathlib import Path
-
-    import __spark_entry__ as entrymod
-
-    from etl_python_spark.operators.dedup import (
-        DEDUP_CACHE_ENV,
-        materialize_dedup_endgame,
-        refresh_dedup_endgame_on_delete,
-    )
-    from etl_python_spark.operators.similarity import (
-        ANN_CACHE_ENV,
-        materialize_ann_index,
-        refresh_ann_index_on_delete,
-    )
-    from etl_python_spark.sources.fingerprint import StaleSnapshotError
-    from etl_python_spark.sources.txn import read_commit, vacuum_root
-
-    spark = _session(warm=True)
-    qs = entrymod.queries()
-
-    def du(root):
-        return sum(
-            f.stat().st_size for f in Path(root).rglob("*") if f.is_file()
-        )
-
-    def backdate(root, seconds=7200.0):
-        past = time.time() - seconds
-        for table in Path(root).iterdir():
-            if table.is_dir():
-                for v in table.iterdir():
-                    if v.name.startswith("v-"):
-                        os.utime(v, (past, past))
-
-    def vdirs(table):
-        return {
-            p.name for p in Path(table).iterdir() if p.name.startswith("v-")
-        }
-
-    def windowed_vacuum(root):
-        """vacuum_root with the retention window; returns (removed,
-        young) where young = reclaimed dirs whose pre-vacuum mtime was
-        inside the window — the only real retention violation."""
-        mtimes = {
-            (t.name, v.name): v.stat().st_mtime
-            for t in Path(root).iterdir() if t.is_dir()
-            for v in t.iterdir() if v.name.startswith("v-")
-        }
-        now = time.time()
-        removed = vacuum_root(spark, root, min_age_seconds=600)
-        young = [
-            f"{t}/{d}"
-            for t, ds in removed.items()
-            for d in ds
-            if now - mtimes.get((t, d), now) < 600
-        ]
-        return removed, young
-
-    # the purge: documents lose doc_id % 10 == 3, embeddings lose
-    # vec_id % 100 == 3 (the unit-scale takedown slices, at sf1)
-    shrunk = os.environ.get("SOAK_SHRUNK_DST", "/tmp/sf1_shrunk")
-    if not os.path.exists(f"{shrunk}/embeddings.parquet"):
-        os.makedirs(shrunk, exist_ok=True)
-        spark.read.parquet(f"{DST}/documents.parquet").filter(
-            "doc_id % 10 <> 3"
-        ).write.mode("overwrite").parquet(f"{shrunk}/documents.parquet")
-        spark.read.parquet(f"{DST}/embeddings.parquet").filter(
-            "vec_id % 100 <> 3"
-        ).write.mode("overwrite").parquet(f"{shrunk}/embeddings.parquet")
-        print(f"shrunk corpus -> {shrunk}", flush=True)
-
-    families = [
-        ("ann", "/tmp/sf1_ann_ret_del", materialize_ann_index,
-         refresh_ann_index_on_delete, ANN_CACHE_ENV, "ivf_pq_search"),
-        ("dedup", "/tmp/sf1_dedup_ret_del", materialize_dedup_endgame,
-         refresh_dedup_endgame_on_delete, DEDUP_CACHE_ENV,
-         "dedup_components"),
-    ]
-    doc = {"sf": "~1 (10x sf0.1)", "cycles": cycles, "mode": "with-deletes"}
-    violations = []
-    for name, root, build_fn, refresh_del, env, query in families:
-        # baselines per corpus — the ground truth every clean read
-        # must hit.  dedup: inline (cache-free) on each corpus (the
-        # pair graph is a pure function of the corpus; refresh ≡
-        # rebuild is byte-identity-pinned).  ANN: the shrunk baseline
-        # CANNOT be an inline re-fit — the takedown contract freezes
-        # the model at its pre-delete fit (and the purge slice removes
-        # init-sample vec_id=3, so a shrunk re-fit is not even
-        # defined); build an independent lifecycle cache (full fit →
-        # takedown refresh) and take ITS serve hash.
-        t0 = time.time()
-        h_full = _canon_hash(qs[query](spark, DST))
-        if name == "ann":
-            scratch = root + "_baseline"
-            shutil.rmtree(scratch, ignore_errors=True)
-            build_fn(spark, DST, scratch)
-            refresh_del(spark, shrunk, scratch)
-            os.environ[env] = scratch
-            try:
-                h_shrunk = _canon_hash(qs[query](spark, shrunk))
-            finally:
-                del os.environ[env]
-            shutil.rmtree(scratch, ignore_errors=True)
-        else:
-            h_shrunk = _canon_hash(qs[query](spark, shrunk))
-        baselines = {DST: h_full, shrunk: h_shrunk}
-        inline_s = round(time.time() - t0, 2)
-
-        shutil.rmtree(root, ignore_errors=True)
-        t0 = time.time()
-        build_fn(spark, DST, root)
-        first = {"build_s": round(time.time() - t0, 2), "bytes": du(root),
-                 "inline_baselines_s": inline_s}
-        print(f"{name}: initial build {first['build_s']}s "
-              f"{first['bytes']:,}B", flush=True)
-
-        os.environ[env] = root
-        rep = {"first_cycle": first, "cycles": [], "reader": {}}
-        lock = threading.Lock()
-        state = {"corpus": DST, "gen": 0, "in_flip": False}
-        stop = threading.Event()
-        counters = {"clean_ok": 0, "flip_window": 0}
-        errors, divergent, stale_outside = [], [], []
-
-        def begin_flip():
-            with lock:
-                state["in_flip"] = True
-                state["gen"] += 1
-
-        def end_flip(corpus):
-            with lock:
-                state["corpus"] = corpus
-                state["in_flip"] = False
-
-        def reader():
-            while not stop.is_set():
-                with lock:
-                    g0, f0, corpus = (
-                        state["gen"], state["in_flip"], state["corpus"]
-                    )
-                try:
-                    got = _canon_hash(qs[query](spark, corpus))
-                    stale = False
-                except StaleSnapshotError:
-                    got, stale = None, True
-                except Exception as e:  # noqa: BLE001 — the gate
-                    errors.append(repr(e))
-                    return
-                with lock:
-                    clean = (
-                        not f0 and not state["in_flip"]
-                        and state["gen"] == g0
-                    )
-                if not clean:
-                    counters["flip_window"] += 1
-                elif stale:
-                    stale_outside.append(corpus)
-                elif got != baselines[corpus]:
-                    divergent.append(corpus)
-                else:
-                    counters["clean_ok"] += 1
-
-        t = threading.Thread(target=reader, daemon=True)
-        t.start()
-
-        def dwell(min_new=1, timeout_s=300):
-            """Hold the corpus state until the reader banks at least
-            ``min_new`` CLEAN reads of it — every cycle must prove a
-            successful post-flip serve, not just tolerated in-flip
-            reads."""
-            start = counters["clean_ok"]
-            t_end = time.time() + timeout_s
-            while (
-                counters["clean_ok"] < start + min_new
-                and time.time() < t_end
-                and not errors
-            ):
-                time.sleep(1)
-            return counters["clean_ok"] - start
-
-        try:
-            for c in range(1, cycles + 1):
-                # purge phase: takedown refresh, cache now serves shrunk
-                begin_flip()
-                t1 = time.time()
-                refresh_del(spark, shrunk, root)
-                end_flip(shrunk)
-                del_s = round(time.time() - t1, 2)
-                removed1, young1 = windowed_vacuum(root)
-                clean_shrunk = dwell()
-                # restore phase: full-corpus rebuild (growth refresh)
-                begin_flip()
-                t1 = time.time()
-                build_fn(spark, DST, root)
-                end_flip(DST)
-                grow_s = round(time.time() - t1, 2)
-                removed2, young2 = windowed_vacuum(root)
-                clean_full = dwell()
-                cyc = {
-                    "delete_refresh_s": del_s,
-                    "restore_build_s": grow_s,
-                    "bytes": du(root),
-                    "windowed_vacuum_removed": [removed1, removed2],
-                    "clean_reads": {"shrunk": clean_shrunk,
-                                    "full": clean_full},
-                }
-                rep["cycles"].append(cyc)
-                print(f"{name}: cycle {c} delete {del_s}s restore "
-                      f"{grow_s}s {cyc['bytes']:,}B clean "
-                      f"shrunk={clean_shrunk} full={clean_full}",
-                      flush=True)
-                if not (clean_shrunk and clean_full):
-                    violations.append(
-                        f"{name}: cycle {c} banked no clean post-flip "
-                        f"read (shrunk={clean_shrunk}, full={clean_full})"
-                    )
-                for young in (young1, young2):
-                    if young:
-                        violations.append(
-                            f"{name}: windowed vacuum reclaimed young "
-                            f"versions: {young}"
-                        )
-        finally:
-            stop.set()
-            t.join(timeout=600)
-        rep["reader"] = {
-            "clean_ok": counters["clean_ok"],
-            "flip_window_reads": counters["flip_window"],
-            "errors": errors,
-            "divergent": divergent,
-            "stale_outside_flip": stale_outside,
-        }
-        if errors:
-            violations.append(f"{name}: reader errored: {errors[:1]}")
-        if divergent:
-            violations.append(
-                f"{name}: reader saw a divergent result OUTSIDE any "
-                f"flip window: {divergent[:3]}"
-            )
-        if stale_outside:
-            violations.append(
-                f"{name}: stale refusal with no flip in flight: "
-                f"{stale_outside[:3]}"
-            )
-        if counters["clean_ok"] < 2 * cycles:
-            violations.append(
-                f"{name}: only {counters['clean_ok']} clean reads — "
-                f"every cycle must prove both post-flip serves "
-                f"(need >= {2 * cycles})"
-            )
-
-        backdate(root)
-        rep["aged_vacuum_removed"] = vacuum_root(
-            spark, root, min_age_seconds=3600
-        )
-        for table in (p.name for p in Path(root).iterdir() if p.is_dir()):
-            live = set(read_commit(spark, f"{root}/{table}")["dirs"])
-            if vdirs(f"{root}/{table}") != live:
-                violations.append(
-                    f"{name}/{table}: leftover dirs != live snapshot"
-                )
-        rep["steady_state_bytes"] = du(root)
-        rep["steady_vs_first"] = round(
-            rep["steady_state_bytes"] / first["bytes"], 3
-        )
-        if rep["steady_state_bytes"] > 1.2 * first["bytes"]:
-            violations.append(
-                f"{name}: steady-state disk {rep['steady_state_bytes']:,}B"
-                f" > 1.2x first-cycle {first['bytes']:,}B"
-            )
-        # the loop ends restored to the FULL corpus: final serve check
-        if _canon_hash(qs[query](spark, DST)) != h_full:
-            violations.append(f"{name}: post-vacuum serve != baseline")
-        del os.environ[env]
-        print(f"{name}: steady state {rep['steady_state_bytes']:,}B "
-              f"({rep['steady_vs_first']}x first), reader "
-              f"{counters['clean_ok']} clean / "
-              f"{counters['flip_window']} in-flip, {len(errors)} errors",
-              flush=True)
-        doc[name] = rep
-
-    doc["violations"] = violations
-    if out_path:
-        with open(out_path, "w") as f:
-            json.dump(doc, f, indent=1, sort_keys=True)
-        print(f"banked -> {out_path}", flush=True)
-    else:
-        print(json.dumps(doc, indent=1, sort_keys=True))
-    for v in violations:
-        print(f"VIOLATION {v}", flush=True)
-    return 1 if violations else 0
-
-
-def _adjudicate(name: str) -> float | None:
-    """Standalone same-host A/B (the round-11 drift rule, mechanized):
-    re-measure one query's warm time in a FRESH warmed JVM, away from
-    whatever chunk context inflated it (chunk composition changes
-    whenever the inventory or window order moves, so sharing a JVM
-    with different neighbors is the most common false-alarm source).
-    Returns the re-measured warm seconds, or None if the child
-    failed or hung (30-minute hard timeout: a wedged child JVM must
-    not stall the whole soak — round-12 ADVICE)."""
-    import subprocess
-    import tempfile
-
-    with tempfile.TemporaryDirectory(prefix="soak_adj_") as td:
-        sub_out = os.path.join(td, "adj.json")
-        try:
-            subprocess.run(
-                [
-                    sys.executable, os.path.abspath(__file__), "run",
-                    "--names", name, "--out", sub_out,
-                ],
-                text=True,
-                capture_output=True,
-                timeout=1800,
-            )
-        except subprocess.TimeoutExpired:
-            return None
-        if not os.path.exists(sub_out):
-            return None
-        r = json.load(open(sub_out)).get("results", {}).get(name, {})
-        return r.get("warm_s")
-
-
-def _finish(
-    results: dict,
-    failures: int,
-    full: bool,
-    out_path: str | None,
-    baseline_path: str | None,
-) -> int:
-    # super-linear regression alarm vs the previous round's soak:
-    # warm time past 2x the banked value AND +2s absolute (so 0.2s→0.5s
-    # GC noise on tiny queries doesn't page anyone).  A candidate alarm
-    # is adjudicated by a standalone fresh-JVM re-measure first; it
-    # stands only if the clean re-run ALSO violates the rule.
-    alarms, adjudicated = [], {}
-    if baseline_path and os.path.exists(baseline_path):
-        base = json.load(open(baseline_path)).get("results", {})
-        for name, r in results.items():
-            b = base.get(name, {})
-            if "warm_s" in r and "warm_s" in b:
-                if r["warm_s"] > 2.0 * b["warm_s"] and r["warm_s"] - b["warm_s"] > 2.0:
-                    rerun = _adjudicate(name)
-                    if rerun is not None and not (
-                        rerun > 2.0 * b["warm_s"] and rerun - b["warm_s"] > 2.0
-                    ):
-                        adjudicated[name] = {
-                            "banked": b["warm_s"],
-                            "in_sweep": r["warm_s"],
-                            "standalone": rerun,
-                        }
-                        results[name]["warm_s_standalone"] = rerun
-                        print(
-                            f"adjudicated {name}: sweep {r['warm_s']}s was "
-                            f"chunk-context; standalone {rerun}s vs banked "
-                            f"{b['warm_s']}s passes the rule",
-                            flush=True,
-                        )
-                        continue
-                    if rerun is None:
-                        alarms.append(
-                            f"{name}: warm {b['warm_s']}s -> {r['warm_s']}s "
-                            f"(standalone re-measure failed — unadjudicated)"
-                        )
-                    else:
-                        alarms.append(
-                            f"{name}: warm {b['warm_s']}s -> {rerun}s "
-                            f"(confirmed standalone)"
-                        )
-        for a in alarms:
-            print(f"ALARM {a}", flush=True)
-
-    doc = {"sf": "~1 (10x sf0.1)", "full": full, "results": results,
-           "alarms": alarms, "adjudicated": adjudicated}
-    if out_path:
-        with open(out_path, "w") as f:
-            json.dump(doc, f, indent=1, sort_keys=True)
-        print(f"banked -> {out_path}", flush=True)
-    else:
-        print(json.dumps(doc, indent=1))
-    return 1 if (failures or alarms) else 0
-
-
 def _cli() -> int:
     cmd = sys.argv[1] if len(sys.argv) > 1 else ""
-    if cmd == "build":
-        build()
-        return 0
-    args = sys.argv[2:]
-
-    def opt(name):
-        return args[args.index(name) + 1] if name in args else None
-
-    if cmd == "endgame":
-        return endgame(out_path=opt("--out"))
-    if cmd == "ann":
-        return ann(out_path=opt("--out"))
-    if cmd == "retention":
-        if "--with-deletes" in args:
-            return retention_deletes(
-                out_path=opt("--out"),
-                cycles=int(opt("--cycles") or 3),
-            )
-        return retention(
-            out_path=opt("--out"),
-            cycles=int(opt("--cycles") or 3),
-        )
-    if cmd != "run":
-        # an unknown subcommand used to silently start a full run
-        print(
-            f"unknown command {cmd!r}: "
-            "use build | run | endgame | ann | retention"
-        )
+    if cmd != "build":
+        print(f"unknown command {cmd!r}: use build")
         return 2
-
-    return run(
-        full="--full" in args,
-        out_path=opt("--out"),
-        baseline_path=opt("--baseline"),
-        names_csv=opt("--names"),
-    )
+    build()
+    return 0
 
 
 if __name__ == "__main__":

@@ -51,10 +51,7 @@ SLICE_PRED = f"o_year = {SLICE_YEAR} AND o_orderkey % 100 = 7"
 def main(cycles: int = 10, out_path: str | None = None) -> int:
     from pyspark.sql import functions as F
 
-    from tools.soak_sf1 import _session
-
-    spark = _session(warm=True)
-
+    from etl_python_spark.session import get_spark
     from etl_python_spark.sources.txn import (
         ConcurrentCommitError,
         list_versions,
@@ -64,6 +61,8 @@ def main(cycles: int = 10, out_path: str | None = None) -> int:
         txn_read,
         vacuum,
     )
+
+    spark = get_spark(app_name="soak_txn")
 
     shutil.rmtree(TABLE, ignore_errors=True)
     orders = (

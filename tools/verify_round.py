@@ -11,12 +11,10 @@ Gates (in order; stops on first failure, prints a summary line each):
   5. bench.py: runs every benched query and prints its JSON line; a
      timing record, not a regression gate (``perfbench/run.py``
      compares parent and change on one host)
-  6. sf1 soak: build /tmp/sf1 if absent, run the FULL inventory at
-     10x data, bank SOAK_r{N}.json, and alarm on any warm time past
-     2x the previous round's banked value (round-7 verdict item 6 —
-     the soak caught two real scale bugs in round 7)
 
-``--fast`` skips gates 3, 5 and 6 for mid-round iteration.
+``--fast`` skips gates 3 and 5 for mid-round iteration.  Timing at
+~sf1 is ``tools/soak_sf1.py build`` then ``SPARK_GRAFT_SF_DIR=/tmp/sf1
+python bench.py <query ...>``.
 """
 
 from __future__ import annotations
@@ -92,47 +90,8 @@ def main() -> int:
         return 1
     if not fast and not run("bench", [py, "bench.py"], 3600):
         return 1
-    if not fast and not soak_gate(py):
-        return 1
     print("ALL GATES GREEN")
     return 0
-
-
-def soak_gate(py: str) -> bool:
-    import glob
-    import re
-
-    dst = os.environ.get("SOAK_DST", "/tmp/sf1")
-    if not os.path.exists(os.path.join(dst, "lineitem.parquet")):
-        if not run("soak build", [py, "tools/soak_sf1.py", "build"], 1800):
-            return False
-    banked = sorted(
-        glob.glob(os.path.join(REPO, "SOAK_r*.json")),
-        key=lambda p: int(re.search(r"r(\d+)", os.path.basename(p)).group(1)),
-    )
-    benches = glob.glob(os.path.join(REPO, "BENCH_r*.json"))
-    n = 1 + max(
-        (int(re.search(r"r(\d+)", os.path.basename(p)).group(1)) for p in benches),
-        default=0,
-    )
-    out = os.path.join(REPO, f"SOAK_r{n:02d}.json")
-    cmd = [py, "tools/soak_sf1.py", "run", "--full", "--out", out]
-    # baseline: the newest banked file that is not this round's own
-    # (re-running within a round diffs against the previous round)
-    prior = [p for p in banked if p != out]
-    if prior:
-        cmd += ["--baseline", prior[-1]]
-    elif banked:
-        # only this round's file exists: diff against a copy of it
-        import shutil
-
-        prev = "/tmp/soak_prev_baseline.json"
-        shutil.copy(banked[-1], prev)
-        cmd += ["--baseline", prev]
-    # the full sweep self-chunks into bounded child JVMs (soak_sf1.py
-    # CHUNK), keeping the measured-fast 8g heap per session without
-    # the end-of-sweep accumulation crashes a single long session hit
-    return run("sf1 soak (full inventory)", cmd, 3600)
 
 
 if __name__ == "__main__":
