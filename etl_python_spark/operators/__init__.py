@@ -60,7 +60,6 @@ EXTENDED = [
     "ivf_pq_search",
     "ivf_pq_recall",
     "ann_index_on_delete",
-    "dedup_pairs_on_delete",
 ]
 
 

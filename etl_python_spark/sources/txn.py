@@ -718,8 +718,8 @@ def txn_delete_keys(
     ``keys`` is evaluated lazily in up to three jobs (match probe,
     restage, surviving-partition scan) — if it is an expensive
     derived frame (an anti-join against a snapshot, say), pin it
-    first (``localCheckpoint``), as the on-delete cache refreshes
-    do; a plain id list read from parquet needs nothing.  A keys plan
+    first (``localCheckpoint``), as the ANN on-delete refresh does;
+    a plain id list read from parquet needs nothing.  A keys plan
     that can yield DIFFERENT rows per evaluation is pinned
     defensively here (see :func:`_pin_unstable_keys`) — without that,
     matched and kept would disagree between jobs and silently corrupt

@@ -31,14 +31,7 @@ def cache_root(spark, tmp_path_factory):
 
     root = str(tmp_path_factory.mktemp("dedup_cache"))
     versions = materialize_dedup_endgame(spark, SF_SMOKE, root)
-    assert versions == {
-        "sizes": 1,
-        "postings": 1,
-        "df": 1,
-        "counts": 1,
-        "pairs": 1,
-        "components": 1,
-    }
+    assert versions == {"pairs": 1, "components": 1}
     return root
 
 
@@ -84,4 +77,4 @@ def test_refresh_publishes_a_new_version(spark, cache_root):
     from etl_python_spark.operators.dedup import materialize_dedup_endgame
 
     versions = materialize_dedup_endgame(spark, SF_SMOKE, cache_root)
-    assert all(v == 2 for v in versions.values()) and len(versions) == 6
+    assert versions == {"pairs": 2, "components": 2}

@@ -1,9 +1,9 @@
 """Incremental snapshot maintenance (round-11 verdict item 3): after
 the corpus grows, the ANN index gains ONLY the new vectors' code rows
 via txn MERGE (coded against the FROZEN model, no Lloyd job) and the
-dedup endgame gains only delta-touched pairs/labels — and in both
-cases merge-then-serve is byte-identical to a from-scratch rebuild on
-the grown corpus under the same semantics."""
+dedup endgame is rebuilt on the new corpus and republished — and in
+both cases refresh-then-serve is byte-identical to a from-scratch
+rebuild on the new corpus under the same semantics."""
 
 import os
 
@@ -118,8 +118,8 @@ class TestDedupIncremental:
         return base, grown, root
 
     def test_refresh_matches_from_scratch_rebuild(self, spark, dirs, tmp_path):
-        """The whole point: incremental refresh on the grown corpus is
-        byte-identical — pairs, components, counts — to a from-scratch
+        """The whole point: the refresh on the grown corpus is
+        byte-identical — pairs and components — to a from-scratch
         materialization of the grown corpus."""
         from etl_python_spark.operators.dedup import (
             materialize_dedup_endgame,
@@ -129,20 +129,14 @@ class TestDedupIncremental:
 
         base, grown, root = dirs
         versions = refresh_dedup_endgame_incremental(spark, grown, root)
-        assert len(versions) == 6 and all(v == 2 for v in versions.values())
+        assert versions == {"pairs": 2, "components": 2}
 
         scratch = str(tmp_path / "scratch")
         materialize_dedup_endgame(spark, grown, scratch)
         for table in ("pairs", "components"):
             got = _canon(txn_read(spark, f"{root}/{table}"))
             want = _canon(txn_read(spark, f"{scratch}/{table}"))
-            assert got == want, f"{table}: incremental != rebuild"
-        # counts may carry inert inter=0 tombstones; compare live rows
-        import pyspark.sql.functions as F
-
-        got = _canon(txn_read(spark, f"{root}/counts").filter(F.col("inter") > 0))
-        want = _canon(txn_read(spark, f"{scratch}/counts"))
-        assert got == want, "counts: incremental != rebuild"
+            assert got == want, f"{table}: refresh != rebuild"
 
     def test_refreshed_cache_serves_grown_corpus(self, spark, dirs, monkeypatch):
         """After the refresh the staleness guard accepts the grown
@@ -168,58 +162,6 @@ class TestDedupIncremental:
         before = _canon(txn_read(spark, f"{root}/pairs"))
         refresh_dedup_endgame_incremental(spark, grown, root)
         assert _canon(txn_read(spark, f"{root}/pairs")) == before
-
-
-def test_cap_crossing_adjustment_is_exact(spark, tmp_path):
-    """Synthetic hot shingle: a base pair exists only through a
-    shingle at df = MAX_DF; delta docs push that shingle over the cap,
-    so the pair must VANISH from the incremental result exactly as it
-    does from a full recompute."""
-    import pyspark.sql.functions as F
-
-    from etl_python_spark.operators.dedup import (
-        MAX_DF,
-        _incremental_pair_counts,
-        _jaccard_from_counts,
-        _pair_counts,
-        hashed_shingle_stream,
-    )
-
-    # base: MAX_DF docs all sharing one hot text (df(shingles)=MAX_DF,
-    # exactly at the cap -> pairs exist); delta: 2 more copies -> over
-    # the cap -> every pair through it must disappear
-    hot = "alpha beta gamma delta epsilon"
-    base_rows = [(i, hot) for i in range(MAX_DF)]
-    delta_rows = [(1000 + i, hot) for i in range(2)]
-    base_docs = spark.createDataFrame(base_rows, "doc_id long, text string")
-    delta_docs = spark.createDataFrame(delta_rows, "doc_id long, text string")
-
-    base_sh = hashed_shingle_stream(base_docs).localCheckpoint(eager=True)
-    delta_sh = hashed_shingle_stream(delta_docs).localCheckpoint(eager=True)
-    base_df = base_sh.groupBy("h").agg(F.count("*").alias("df"))
-    base_kept = base_sh.join(
-        base_df.filter((F.col("df") >= 2) & (F.col("df") <= MAX_DF)),
-        "h",
-        "left_semi",
-    )
-    base_counts = _pair_counts(base_kept)
-    assert base_counts.count() == MAX_DF * (MAX_DF - 1) // 2  # at the cap
-
-    counts_new, changed, df_changed = _incremental_pair_counts(
-        base_sh, base_df, base_counts, delta_sh
-    )
-    assert _jaccard_from_counts(counts_new).count() == 0  # all pairs gone
-    # the changed-rows feed carries the tombstones for the merge
-    assert changed.filter(F.col("inter") > 0).count() == 0
-    # full recompute agrees
-    grown_sh = base_sh.unionByName(delta_sh)
-    grown_df = grown_sh.groupBy("h").agg(F.count("*").alias("df"))
-    grown_kept = grown_sh.join(
-        grown_df.filter((F.col("df") >= 2) & (F.col("df") <= MAX_DF)),
-        "h",
-        "left_semi",
-    )
-    assert _jaccard_from_counts(_pair_counts(grown_kept)).count() == 0
 
 
 class TestAnnOnDelete:
@@ -301,8 +243,6 @@ class TestDedupOnDelete:
     def test_delete_refresh_matches_from_scratch_rebuild(
         self, spark, dirs, tmp_path
     ):
-        import pyspark.sql.functions as F
-
         from etl_python_spark.operators.dedup import (
             materialize_dedup_endgame,
             refresh_dedup_endgame_on_delete,
@@ -318,19 +258,6 @@ class TestDedupOnDelete:
             got = _canon(txn_read(spark, f"{root}/{table}"))
             want = _canon(txn_read(spark, f"{scratch}/{table}"))
             assert got == want, f"{table}: delete refresh != rebuild"
-        got = _canon(
-            txn_read(spark, f"{root}/counts").filter(F.col("inter") > 0)
-        )
-        want = _canon(txn_read(spark, f"{scratch}/counts"))
-        assert got == want, "counts: delete refresh != rebuild"
-        # purged docs left every per-doc table
-        for table in ("sizes", "postings"):
-            n = (
-                txn_read(spark, f"{root}/{table}")
-                .filter("doc_id % 10 = 3")
-                .count()
-            )
-            assert n == 0, f"{table} still holds purged docs"
 
     def test_refreshed_cache_serves_shrunk_corpus(
         self, spark, dirs, monkeypatch
@@ -344,53 +271,44 @@ class TestDedupOnDelete:
         assert _canon(qs["dedup_components"](spark, shrunk)) == inline
 
 
-def test_cap_recross_addition_is_exact(spark):
-    """The delete-side mirror of the cap-crossing test: a hot shingle
-    sits just OVER the cap (df = MAX_DF + 2, no pairs through it);
-    purging two holders brings it back to df = MAX_DF, so every
-    survivor pair through it must APPEAR in the decremental result
-    exactly as in a full recompute of the survivors."""
-    import pyspark.sql.functions as F
+def test_refresh_tracks_the_df_cap_both_ways(spark, tmp_path):
+    """A hot text held by exactly MAX_DF docs pairs them all; two more
+    copies push its shingles over the df cap, so the grow refresh must
+    drop every pair through them, and the takedown refresh that purges
+    the two copies must bring every pair back."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
     from etl_python_spark.operators.dedup import (
         MAX_DF,
-        _decremental_pair_counts,
-        _jaccard_from_counts,
-        _pair_counts,
-        hashed_shingle_stream,
+        materialize_dedup_endgame,
+        refresh_dedup_endgame_incremental,
+        refresh_dedup_endgame_on_delete,
     )
+    from etl_python_spark.sources.txn import txn_read
 
-    hot = "alpha beta gamma delta epsilon"
-    rows = [(i, hot) for i in range(MAX_DF + 2)]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    base_sh = hashed_shingle_stream(docs).localCheckpoint(eager=True)
-    base_df = base_sh.groupBy("h").agg(F.count("*").alias("df"))
-    base_kept = base_sh.join(
-        base_df.filter((F.col("df") >= 2) & (F.col("df") <= MAX_DF)),
-        "h",
-        "left_semi",
-    )
-    base_counts = _pair_counts(base_kept)
-    assert base_counts.count() == 0  # over the cap: no pairs banked
+    def corpus(name, n):
+        d = tmp_path / name
+        d.mkdir()
+        docs = {"doc_id": list(range(n)), "text": ["alpha beta gamma delta epsilon"] * n}
+        pq.write_table(pa.table(docs), d / "documents.parquet")
+        return str(d)
 
-    removed = spark.createDataFrame(
-        [(MAX_DF,), (MAX_DF + 1,)], "doc_id long"
-    )
-    surv_sh = base_sh.join(removed, "doc_id", "left_anti")
-    counts_new, changed, df_changed = _decremental_pair_counts(
-        surv_sh, base_df, base_counts, removed
-    )
-    expect = MAX_DF * (MAX_DF - 1) // 2
-    assert _jaccard_from_counts(counts_new).count() == expect
-    assert changed.filter(F.col("inter") > 0).count() == expect
-    # full recompute of the survivors agrees
-    surv_df = surv_sh.groupBy("h").agg(F.count("*").alias("df"))
-    surv_kept = surv_sh.join(
-        surv_df.filter((F.col("df") >= 2) & (F.col("df") <= MAX_DF)),
-        "h",
-        "left_semi",
-    )
-    assert _jaccard_from_counts(_pair_counts(surv_kept)).count() == expect
+    root = str(tmp_path / "root")
+    clique = MAX_DF * (MAX_DF - 1) // 2
+
+    def counts():
+        return (
+            txn_read(spark, f"{root}/pairs").count(),
+            txn_read(spark, f"{root}/components").count(),
+        )
+
+    materialize_dedup_endgame(spark, corpus("at_cap", MAX_DF), root)
+    assert counts() == (clique, MAX_DF)
+    refresh_dedup_endgame_incremental(spark, corpus("over_cap", MAX_DF + 2), root)
+    assert counts() == (0, 0)
+    refresh_dedup_endgame_on_delete(spark, corpus("purged", MAX_DF), root)
+    assert counts() == (clique, MAX_DF)
 
 
 class TestRightToBeForgotten:
@@ -533,8 +451,6 @@ class TestRightToBeForgotten:
     def test_endgame_serve_is_scratch_identical_and_purged_free(
         self, spark, world, tmp_path, monkeypatch
     ):
-        import pyspark.sql.functions as F
-
         from etl_python_spark import operators
         from etl_python_spark.operators.dedup import materialize_dedup_endgame
         from etl_python_spark.sources.txn import txn_read
@@ -542,17 +458,12 @@ class TestRightToBeForgotten:
         root = world["dedup_root"]
         scratch = str(tmp_path / "scratch_endgame")
         materialize_dedup_endgame(spark, world["doc_shrunk"], scratch)
-        for table in ("pairs", "components", "sizes", "postings"):
+        comp = txn_read(spark, f"{root}/components")
+        assert comp.filter("doc_id % 10 = 3").count() == 0
+        for table in ("pairs", "components"):
             got = txn_read(spark, f"{root}/{table}")
-            if "doc_id" in got.columns:
-                assert got.filter("doc_id % 10 = 3").count() == 0, table
             want = txn_read(spark, f"{scratch}/{table}")
-            if table in ("pairs", "components"):
-                assert _canon(got) == _canon(want), table
-        got_counts = _canon(
-            txn_read(spark, f"{root}/counts").filter(F.col("inter") > 0)
-        )
-        assert got_counts == _canon(txn_read(spark, f"{scratch}/counts"))
+            assert _canon(got) == _canon(want), table
 
         qs = operators.all_queries()
         inline = _canon(qs["dedup_components"](spark, world["doc_shrunk"]))
