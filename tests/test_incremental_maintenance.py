@@ -271,44 +271,75 @@ class TestDedupOnDelete:
         assert _canon(qs["dedup_components"](spark, shrunk)) == inline
 
 
-def test_refresh_tracks_the_df_cap_both_ways(spark, tmp_path):
-    """A hot text held by exactly MAX_DF docs pairs them all; two more
-    copies push its shingles over the df cap, so the grow refresh must
-    drop every pair through them, and the takedown refresh that purges
-    the two copies must bring every pair back."""
+def _hot_text_corpus(tmp_path, name, n):
+    """n copies of one hot text: every shingle has df = n."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    d = tmp_path / name
+    d.mkdir()
+    docs = {"doc_id": list(range(n)), "text": ["alpha beta gamma delta epsilon"] * n}
+    pq.write_table(pa.table(docs), d / "documents.parquet")
+    return str(d)
+
+
+def _endgame_rows(spark, root):
+    from etl_python_spark.sources.txn import txn_read
+
+    return (
+        _canon(txn_read(spark, f"{root}/pairs")),
+        _canon(txn_read(spark, f"{root}/components")),
+    )
+
+
+def test_cap_crossing_adjustment_is_exact(spark, tmp_path):
+    """A hot text held by exactly MAX_DF docs pairs them all; two more
+    copies push its shingles over the df cap, so the grow refresh must
+    drop every pair through them, exactly as a from-scratch build of
+    the grown corpus does."""
     from etl_python_spark.operators.dedup import (
         MAX_DF,
         materialize_dedup_endgame,
         refresh_dedup_endgame_incremental,
-        refresh_dedup_endgame_on_delete,
     )
-    from etl_python_spark.sources.txn import txn_read
-
-    def corpus(name, n):
-        d = tmp_path / name
-        d.mkdir()
-        docs = {"doc_id": list(range(n)), "text": ["alpha beta gamma delta epsilon"] * n}
-        pq.write_table(pa.table(docs), d / "documents.parquet")
-        return str(d)
 
     root = str(tmp_path / "root")
-    clique = MAX_DF * (MAX_DF - 1) // 2
+    materialize_dedup_endgame(spark, _hot_text_corpus(tmp_path, "at_cap", MAX_DF), root)
+    pairs, components = _endgame_rows(spark, root)
+    assert (len(pairs), len(components)) == (MAX_DF * (MAX_DF - 1) // 2, MAX_DF)
 
-    def counts():
-        return (
-            txn_read(spark, f"{root}/pairs").count(),
-            txn_read(spark, f"{root}/components").count(),
-        )
+    grown = _hot_text_corpus(tmp_path, "over_cap", MAX_DF + 2)
+    refresh_dedup_endgame_incremental(spark, grown, root)
+    assert _endgame_rows(spark, root) == ([], [])
+    scratch = str(tmp_path / "scratch")
+    materialize_dedup_endgame(spark, grown, scratch)
+    assert _endgame_rows(spark, scratch) == ([], [])
 
-    materialize_dedup_endgame(spark, corpus("at_cap", MAX_DF), root)
-    assert counts() == (clique, MAX_DF)
-    refresh_dedup_endgame_incremental(spark, corpus("over_cap", MAX_DF + 2), root)
-    assert counts() == (0, 0)
-    refresh_dedup_endgame_on_delete(spark, corpus("purged", MAX_DF), root)
-    assert counts() == (clique, MAX_DF)
+
+def test_cap_recross_addition_is_exact(spark, tmp_path):
+    """The takedown mirror: a hot text held by MAX_DF + 2 docs is over
+    the df cap (no pairs); purging two holders brings it back to the
+    cap, so the takedown refresh must pair every survivor, exactly as
+    a from-scratch build of the survivors does."""
+    from etl_python_spark.operators.dedup import (
+        MAX_DF,
+        materialize_dedup_endgame,
+        refresh_dedup_endgame_on_delete,
+    )
+
+    root = str(tmp_path / "root")
+    materialize_dedup_endgame(
+        spark, _hot_text_corpus(tmp_path, "over_cap", MAX_DF + 2), root
+    )
+    assert _endgame_rows(spark, root) == ([], [])
+
+    survivors = _hot_text_corpus(tmp_path, "purged", MAX_DF)
+    refresh_dedup_endgame_on_delete(spark, survivors, root)
+    pairs, components = _endgame_rows(spark, root)
+    assert (len(pairs), len(components)) == (MAX_DF * (MAX_DF - 1) // 2, MAX_DF)
+    scratch = str(tmp_path / "scratch")
+    materialize_dedup_endgame(spark, survivors, scratch)
+    assert _endgame_rows(spark, scratch) == (pairs, components)
 
 
 class TestRightToBeForgotten:
