@@ -12,6 +12,15 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Spark's generated-class LRU (a static conf: it must be set before the
+# JVM first compiles).  Measured on 4 CPUs at sf0.001: a warm pass of
+# the 22 HEADLINE queries recompiled 270 of its 280 classes at Spark's
+# default of 100 entries and 0 at 1000.  HEADLINE + EXTENDED compile
+# 728 at sf0.01.  An entry keeps its source text and class: 30-75 KB
+# of driver heap after GC (all benched queries twice at sf0.001: 178 MB
+# at 100 entries, 198 MB at 1000).
+CODEGEN_CACHE_ENTRIES = 1000
+
 
 def get_spark(
     app_name: str = "etl_python_spark",
@@ -28,6 +37,15 @@ def get_spark(
     - Broadcast threshold left at default (10 MB); small dims are
       additionally hinted explicitly with ``F.broadcast`` at call
       sites so the plan survives stale/absent stats.
+    - Generated-code cache of ``CODEGEN_CACHE_ENTRIES`` classes
+      (``spark.sql.codegen.cache.maxEntries``, Spark's default is
+      100).  It serves workloads that re-run the same query shapes in
+      one process — a serving loop, a repeated batch, the
+      ``star_sf0.1`` benchmark's passes: the headline set's ~270
+      classes evicted each other at 100, so every warm pass recompiled
+      them all and ran the new classes in the JVM interpreter again.
+      A one-shot run (one cycle, as ``lifecycle_sf0.01`` is) gains
+      nothing from it.
     """
     # the host's usable cores unless SPARK_GRAFT_CPUS pins a count
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
@@ -42,6 +60,7 @@ def get_spark(
         )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         # columnar parquet reads + pushdown are defaults; pin anyway so
         # a misconfigured cluster profile can't silently disable them
         .config("spark.sql.parquet.filterPushdown", "true")

@@ -37,8 +37,10 @@ def _table_stream(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     DIRECTORY name, not the part files inside it, so the dir layout
     under the glob path would silently drain zero rows — the sf1 soak
     caught exactly that."""
+    from ..sources.tables import table_schema
+
     path = os.path.join(sf_dir, f"{table}.parquet")
-    schema = spark.read.parquet(path).schema
+    schema = table_schema(spark, sf_dir, table) or spark.read.parquet(path).schema
     if os.path.isdir(path):
         return spark.readStream.schema(schema).parquet(path)
     return (
