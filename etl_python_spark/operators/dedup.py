@@ -337,18 +337,28 @@ def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
     neighborhood minimum.  Each pair of steps at least halves the
     depth of every tree, so convergence takes O(log diameter) rounds
     (a 200-deep path graph converges in under 20, where min-label
-    propagation needs ~199); at the fixed point the edge set is a star
-    per component — (v, root) for every non-root v — which IS the
-    label table.  Self-loop-only vertices have no component.
+    propagation needs ~199).  Self-loop-only vertices have no
+    component.
+
+    Stop rule: the loop ends at the first round whose output is in
+    STAR FORM — every vertex is a child (``u``) at most once and never
+    both a child and a parent (``w``).  That is exact, not a
+    heuristic: a star forest is a fixed point of the round (one more
+    round returns the same edge set), and every output edge has
+    ``u > w``, so each star's centre is its component's minimum.  The
+    edge set is then the label table: (v, root) for every non-root v,
+    and the roots are exactly the distinct ``w``.  Waiting for a round
+    equal to the one before it, as a plain fixed-point loop does,
+    returns the same edges one round later.
 
     Scale shape: both steps are one groupBy + one keyed join on the
     current edge set (which only shrinks toward star form — no
-    vertex-count blowup); each round is ONE job — the exact
-    symmetric-difference aggregate that both materializes the round's
-    lazy-checkpointed edge set and returns the convergence scalar
-    (bounded driver traffic: one long).  Skew note: after one
-    round every high-degree hub IS a component minimum, so its edges
-    key on distinct smaller vertices, not one hot key.
+    vertex-count blowup); each round is ONE job — the star-form
+    aggregate that both materializes the round's lazy-checkpointed
+    edge set and returns the test's scalar (bounded driver traffic:
+    one long).  Skew note: after one round every high-degree hub IS a
+    component minimum, so its edges key on distinct smaller vertices,
+    not one hot key.
 
     Fails loudly on non-convergence within ``max_iter`` rounds (a
     silent partial result would split components)."""
@@ -358,19 +368,7 @@ def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
         .distinct()
         .localCheckpoint(eager=True)
     )
-    # verts is consumed ONLY by the final roots anti-join — keep it a
-    # lazy plan over the initial edge checkpoint instead of paying an
-    # eager materialization job for a relation the loop never reads
-    # (guide §1.2: don't compute ahead of need).
-    verts = (
-        e.select(F.col("u").alias("v"))
-        .union(e.select(F.col("w").alias("v")))
-        .distinct()
-    )
-    converged = False
-    rounds = 0
-    for _ in range(max_iter):
-        rounds += 1
+    for rounds in range(1, max_iter + 1):
         # large-star: attach strictly larger neighbors to the minimum
         sym = e.union(e.select(F.col("w").alias("u"), F.col("u").alias("w")))
         mins = (
@@ -393,16 +391,10 @@ def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
         )
         mins2 = se.groupBy("u").agg(F.min("w").alias("m"))
         joined = se.join(mins2, "u")
-        # LAZY local checkpoint (r17): the convergence aggregate below
-        # is now the round's ONLY job — its map side computes `small`
+        # LAZY local checkpoint (r17): the star-form aggregate below is
+        # the round's ONLY job — its map side computes `small`
         # (persisting it as the local checkpoint en route) and the
-        # reduce side returns the diff count, fusing what r16 ran as
-        # two jobs per round (eager materialization + separate check;
-        # guide §1.2).  Interleaved idle-host A/B on the two benched
-        # CC consumers: dedup_components 5.77 s (eager) → 4.09 s
-        # (fused), fuzzy_components 4.28 → 4.07
-        # (3fd71ea:plans/r17/probe_cc_ab.json; identical rows asserted
-        # in the same probe).
+        # reduce side returns the violation count (guide §1.2).
         small = (
             joined.filter(F.col("w") != F.col("m"))
             .select(F.col("w").alias("u"), F.col("m").alias("w"))
@@ -410,26 +402,30 @@ def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
             .distinct()
             .localCheckpoint(eager=False)
         )
-        # exact fixed-point check (no hash shortcut: an early stop on a
-        # collision would silently split components).  Both sides are
-        # distinct by construction, so symmetric-difference emptiness
-        # is ONE aggregate — every (u, w) group must hold exactly one
-        # row from each side — instead of the former two exceptAll
-        # jobs (same exactness, one shuffle).
-        n_diff = (
-            small.select("u", "w").unionAll(e.select("u", "w"))
-            .groupBy("u", "w")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .filter(F.col("c") != 2)
-            .limit(1)
+        # star-form test, exact: tag each edge's child and parent end,
+        # then count the vertices that are a child and also appear a
+        # second time (as a child again, or as a parent).  A plain
+        # count, not a LIMIT: a planned LIMIT names its counter from a
+        # JVM-global sequence, so its generated code never hits the
+        # codegen cache on a warm re-run.
+        ends = small.select(
+            F.explode(
+                F.array(
+                    F.struct(F.col("u").alias("v"), F.lit(1).alias("child")),
+                    F.struct(F.col("w").alias("v"), F.lit(0).alias("child")),
+                )
+            ).alias("t")
+        ).select("t.v", "t.child")
+        n_bad = (
+            ends.groupBy("v")
+            .agg(F.sum("child").alias("c"), F.count(F.lit(1)).alias("n"))
+            .filter((F.col("c") > 0) & (F.col("n") > 1))
             .count()
         )
-        if n_diff == 0:
-            e = small
-            converged = True
-            break
         e = small
-    if not converged:
+        if n_bad == 0:
+            break
+    else:
         raise RuntimeError(
             f"connected_components(star) did not converge in {max_iter} "
             "rounds; raise max_iter"
@@ -440,9 +436,9 @@ def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
     non_roots = e.select(
         F.col("u").alias("doc_id"), F.col("w").alias("component_id")
     )
-    roots = verts.join(
-        e.select(F.col("u").alias("v")).distinct(), "v", "left_anti"
-    ).select(F.col("v").alias("doc_id"), F.col("v").alias("component_id"))
+    roots = e.select(F.col("w").alias("doc_id")).distinct().select(
+        "doc_id", F.col("doc_id").alias("component_id")
+    )
     return non_roots.union(roots)
 
 

@@ -1712,6 +1712,7 @@ def materialize_ann_index(
     (``SPARK_GRAFT_ANN_CACHE``) then reads 8 small ints per corpus
     vector and never touches raw floats outside the bounded re-rank
     fetch."""
+    import pandas as pd
     from pyspark.sql.types import (
         ArrayType,
         DoubleType,
@@ -1749,10 +1750,13 @@ def materialize_ann_index(
         for m in range(len(cb))
         for k in range(len(cb[m]))
     ]
+    # a pandas frame goes through Arrow when the session enables it
+    # (get_spark does), one columnar batch instead of a pickled row each
+    model = pd.DataFrame(rows, columns=schema.fieldNames())
     versions = {
         "model": txn_write(
             spark,
-            spark.createDataFrame(rows, schema),
+            spark.createDataFrame(model, schema),
             f"{root}/model",
             app_meta=meta,
         )
@@ -1778,6 +1782,16 @@ def _snapshot_model(spark: SparkSession, root: str):
     return centroids, cb
 
 
+def _rebank(spark: SparkSession, path: str, meta: dict) -> int:
+    """Republish the latest manifest of a table whose data is frozen
+    with a new ``app_meta`` (the corpus fingerprint): a metadata-only
+    commit that reads and writes no data, and whose data dirs stay the
+    ones the build wrote."""
+    from ..sources.txn import read_commit, txn_restore
+
+    return txn_restore(spark, path, read_commit(spark, path)["version"], app_meta=meta)
+
+
 def refresh_ann_index_incremental(
     spark: SparkSession, sf_dir: str, root: str
 ) -> dict[str, int]:
@@ -1786,7 +1800,8 @@ def refresh_ann_index_incremental(
     their rows into the published index (txn copy-on-write upsert —
     readers never see a partial index), then re-bank the grown
     corpus's fingerprint on both tables so the staleness guard accepts
-    the new corpus.  Returns {table: new version}.
+    the new corpus (the model by a metadata-only :func:`_rebank`).
+    Returns {table: new version}.
 
     NO Lloyd job runs (pinned by tests/test_incremental_maintenance.py)
     and the merged rows are byte-identical to a from-scratch recode of
@@ -1798,7 +1813,7 @@ def refresh_ann_index_incremental(
     separate deliberate decision (:func:`materialize_ann_index`), not
     a correctness requirement."""
     from ..sources.fingerprint import META_KEY, corpus_fingerprint
-    from ..sources.txn import txn_merge_upsert, txn_read, txn_write
+    from ..sources.txn import txn_merge_upsert, txn_read
 
     centroids, cb = _snapshot_model(spark, root)
     emb = _load_vectors(spark, sf_dir)
@@ -1817,11 +1832,7 @@ def refresh_ann_index_incremental(
         "index": txn_merge_upsert(
             spark, rows, f"{root}/index", keys=["n_id"], app_meta=meta
         ),
-        # model data is frozen; rewrite only to re-bank the fingerprint
-        # (kilobytes — the model table is K×dim + M×KS×dsub doubles)
-        "model": txn_write(
-            spark, txn_read(spark, f"{root}/model"), f"{root}/model", app_meta=meta
-        ),
+        "model": _rebank(spark, f"{root}/model", meta),
     }
     return versions
 
@@ -1919,15 +1930,17 @@ def refresh_ann_index_on_delete(
     detect the removed ids (published index anti-join the corpus),
     txn-DELETE exactly their rows (copy-on-write, restaging only the
     partitions that contain matches), and re-bank the shrunk corpus's
-    fingerprint on both tables.  The model stays byte-frozen — coding
-    is per-row, so no surviving row changes (pinned no-Lloyd +
-    byte-identity in tests/test_incremental_maintenance.py).  Work is
+    fingerprint on both tables (metadata-only :func:`_rebank` commits
+    for a table whose data did not change).  The model stays
+    byte-frozen — coding is per-row, so no surviving row changes
+    (pinned no-Lloyd + byte-identity in
+    tests/test_incremental_maintenance.py).  Work is
     one id anti-join plus a delete bounded by the takedown batch; the
     purged rows stop being readable once :func:`~..sources.txn.vacuum`
     reclaims the old version's dirs — the two-step every table format
     documents for right-to-be-forgotten."""
     from ..sources.fingerprint import META_KEY, corpus_fingerprint
-    from ..sources.txn import txn_delete_keys, txn_read, txn_write
+    from ..sources.txn import read_commit, txn_delete_keys, txn_read
 
     meta = {
         META_KEY: corpus_fingerprint(sf_dir, "embeddings"),
@@ -1942,36 +1955,20 @@ def refresh_ann_index_on_delete(
     # (a whole source or license class — millions of ids at 100 TB)
     # never builds an ``isin`` literal in the plan or an id list on
     # the driver (round-12 verdict item 2); pinned once because it
-    # feeds the emptiness probe and both delete-side joins
+    # feeds both delete-side joins
+    index = f"{root}/index"
     removed_ids = (
-        txn_read(spark, f"{root}/index")
+        txn_read(spark, index)
         .select("n_id")
         .distinct()
         .join(corpus_ids, "n_id", "left_anti")
         .localCheckpoint(eager=True)
     )
-    if removed_ids.limit(1).count():
-        index_v = txn_delete_keys(
-            spark,
-            f"{root}/index",
-            removed_ids,
-            on=["n_id"],
-            app_meta=meta,
-        )
-    else:  # nothing to purge: re-bank the fingerprint only
-        index_v = txn_write(
-            spark,
-            txn_read(spark, f"{root}/index"),
-            f"{root}/index",
-            app_meta=meta,
-        )
-    return {
-        "index": index_v,
-        # model data is frozen; rewrite only to re-bank the fingerprint
-        "model": txn_write(
-            spark, txn_read(spark, f"{root}/model"), f"{root}/model", app_meta=meta
-        ),
-    }
+    current = read_commit(spark, index)["version"]
+    index_v = txn_delete_keys(spark, index, removed_ids, on=["n_id"], app_meta=meta)
+    if index_v == current:  # nothing to purge: re-bank the fingerprint only
+        index_v = _rebank(spark, index, meta)
+    return {"index": index_v, "model": _rebank(spark, f"{root}/model", meta)}
 
 
 # Restates q_ann_index_on_delete: the fit CTEs see the FULL corpus

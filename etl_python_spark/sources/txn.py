@@ -829,7 +829,10 @@ def _txn_delete(
             for r in kept_df.select(*pc).distinct().collect()
         }
     else:
-        if matched(target).limit(1).count() == 0:
+        # isEmpty, not limit(1).count(): a planned LIMIT names its
+        # counter from a JVM-global sequence, so its generated code
+        # misses the codegen cache on every call
+        if matched(target).isEmpty():
             return prev["version"]
         kept_df = kept(target)
 
@@ -883,7 +886,12 @@ def txn_restore(
     copied, or rewritten, exactly like every table format's RESTORE.
     The bad versions stay in history (auditable) until :func:`vacuum`;
     restore is only possible while the target version's dirs survive
-    vacuum's retention, so schedule vacuum accordingly."""
+    vacuum's retention, so schedule vacuum accordingly.
+
+    Restoring the LATEST version with a new ``app_meta`` re-banks a
+    table whose data did not change: the ANN refreshes stamp the new
+    corpus fingerprint on the frozen model (and on an index a takedown
+    left untouched) this way, without rewriting a byte of data."""
     target = read_commit(spark, path, version)
     if target is None:
         raise FileNotFoundError(

@@ -71,3 +71,25 @@ def test_index_refresh_publishes_new_versions(spark, ann_root):
 
     versions = materialize_ann_index(spark, SF_SMOKE, ann_root)
     assert versions == {"model": 2, "index": 2}
+
+
+def test_snapshot_model_returns_the_fitted_doubles(spark, tmp_path, monkeypatch):
+    """The model table round-trips the fit exactly: every centroid and
+    codeword double reads back equal (==, no tolerance)."""
+    from etl_python_spark.operators import similarity as S
+
+    fitted = []
+    fit = S._fit_ivf_pq
+
+    def recording_fit(emb):
+        out = fit(emb)
+        fitted.append(out)
+        return out
+
+    monkeypatch.setattr(S, "_fit_ivf_pq", recording_fit)
+    root = str(tmp_path / "ann")
+    S.materialize_ann_index(spark, SF_SMOKE, root)
+    (centroids, _, cb), = fitted
+    got_centroids, got_cb = S._snapshot_model(spark, root)
+    assert got_centroids == [[float(x) for x in c] for c in centroids]
+    assert got_cb == [[[float(x) for x in w] for w in part] for part in cb]

@@ -104,6 +104,60 @@ class TestAnnIncremental:
         assert versions["index"] >= 3
 
 
+def test_ann_refreshes_rebank_frozen_tables_without_rewriting(spark, tmp_path):
+    """Grow, an empty takedown and a real takedown re-bank the frozen
+    tables by metadata-only commits: the model keeps the build's data
+    dirs (an index with nothing purged keeps its own), every version
+    still advances, the staleness guard accepts the new corpus, and
+    vacuum reclaims none of the shared dirs."""
+    import pyarrow.parquet as pq
+
+    from etl_python_spark.operators import similarity as S
+    from etl_python_spark.sources.fingerprint import check_snapshot_fresh
+    from etl_python_spark.sources.txn import read_commit, vacuum_root
+
+    base, grown = _split_corpus(spark, tmp_path, "embeddings", "vec_id", 100, 97)
+    tbl = pq.read_table(f"{grown}/embeddings.parquet")
+    shrunk = tmp_path / "shrunk"
+    shrunk.mkdir()
+    pq.write_table(
+        tbl.filter([i % 100 != 3 for i in tbl["vec_id"].to_pylist()]),
+        shrunk / "embeddings.parquet",
+    )
+    root = str(tmp_path / "root")
+    S.materialize_ann_index(spark, base, root)
+
+    def state(table):
+        rec = read_commit(spark, f"{root}/{table}")
+        return rec["version"], rec["dirs"]
+
+    model_v, model_dirs = state("model")
+    steps = [
+        (S.refresh_ann_index_incremental, grown, "changed"),
+        (S.refresh_ann_index_on_delete, grown, "kept"),
+        (S.refresh_ann_index_on_delete, str(shrunk), "changed"),
+    ]
+    for refresh, sf_dir, index_dirs in steps:
+        index_v, before = state("index")
+        assert refresh(spark, sf_dir, root) == {
+            "index": index_v + 1,
+            "model": model_v + 1,
+        }
+        model_v += 1
+        assert state("model") == (model_v, model_dirs)
+        after = state("index")[1]
+        assert (after == before) == (index_dirs == "kept"), refresh.__name__
+        for table in ("model", "index"):
+            check_snapshot_fresh(spark, f"{root}/{table}", sf_dir, "embeddings")
+
+    removed = vacuum_root(spark, root)
+    assert "model" not in removed
+    for table in ("model", "index"):
+        live = set(read_commit(spark, f"{root}/{table}")["dirs"])
+        on_disk = {p.name for p in (tmp_path / "root" / table).glob("v-*")}
+        assert on_disk == live
+
+
 class TestDedupIncremental:
     @pytest.fixture(scope="class")
     def dirs(self, spark, tmp_path_factory):

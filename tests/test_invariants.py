@@ -207,6 +207,53 @@ def test_cc_star_handles_multi_component_graphs(spark):
     }
 
 
+def _random_graph(rng):
+    """A small edge list with every shape the kernel must absorb:
+    several components, duplicate and reversed edges, self-loops
+    (including on otherwise isolated vertices) and isolated pairs."""
+    n = rng.randint(2, 40)
+    edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(rng.randint(1, 2 * n))]
+    edges += [(b, a) for a, b in rng.sample(edges, len(edges) // 4)]
+    edges += rng.sample(edges, len(edges) // 4)
+    edges += [(v, v) for v in rng.sample(range(n + 10), 3)]
+    base = 1000 * (n + 1)
+    edges += [(base + 2 * i, base + 2 * i + 1) for i in range(rng.randint(0, 3))]
+    rng.shuffle(edges)
+    return edges
+
+
+def test_cc_star_matches_union_find_on_random_graphs(spark):
+    """Seeded property test: on 50 random graphs the star-form stop
+    returns exactly the union-find components."""
+    import random
+
+    from etl_python_spark.operators.dedup import connected_components
+
+    rng = random.Random(1501)
+    for g in range(50):
+        edges = _random_graph(rng)
+        df = spark.createDataFrame(edges, "doc_a long, doc_b long")
+        assert _cc_dict(connected_components(df)) == _union_find_components(edges), (
+            g,
+            edges,
+        )
+
+
+def test_cc_star_stops_at_the_first_star_round(spark):
+    """A graph that is one star after a single round stops there: the
+    star-form test needs no second round to confirm nothing changed."""
+    from etl_python_spark.operators import dedup as dedup_mod
+
+    edges = [(0, i) for i in range(1, 50)]
+    got = _cc_dict(
+        dedup_mod.connected_components(
+            spark.createDataFrame(edges, "doc_a long, doc_b long")
+        )
+    )
+    assert got == {i: 0 for i in range(50)}
+    assert dedup_mod.LAST_CC_ROUNDS == 1
+
+
 def test_training_shuffle_is_a_permutation(spark):
     """pos must be a bijection 1..n over the corpus, stable across
     runs, and actually shuffled (not doc_id order)."""
