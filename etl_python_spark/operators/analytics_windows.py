@@ -7,7 +7,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.dates import MONTH_NAMES_PT, month_name_pt
+from ..functions.dates import (
+    MONTH_NAMES_PT,
+    is_business_day,
+    month_name_pt,
+    week_of_month,
+)
 from ..functions.numeric import dsum
 from ..sources.tables import load_table, range_parts
 
@@ -25,7 +30,7 @@ def calendar_dim(spark: SparkSession, start: str, end: str) -> DataFrame:
         f"SELECT explode(sequence(to_date('{start}'), to_date('{end}'), "
         "interval 1 day)) AS data"
     )
-    is_bus = F.dayofweek("data").isin(2, 3, 4, 5, 6)
+    is_bus = is_business_day("data")
     w_year = (
         Window.partitionBy(F.year("data"))
         .orderBy("data")
@@ -44,7 +49,7 @@ def calendar_dim(spark: SparkSession, start: str, end: str) -> DataFrame:
         F.quarter("data").alias("trimestre"),
         F.weekofyear("data").alias("semana_iso"),
         month_name_pt(F.col("data")).alias("nome_mes"),
-        F.ceil(F.dayofmonth("data") / 7.0).cast("int").alias("semana_do_mes"),
+        week_of_month("data").alias("semana_do_mes"),
         is_bus.cast("int").alias("dia_util"),
         F.sum(is_bus.cast("int")).over(w_year).alias("dia_util_ano"),
         F.sum(is_bus.cast("int")).over(w_month).alias("dia_util_mes"),

@@ -616,8 +616,8 @@ FROM cells
 # al. 2020): score every doc by the cross-entropy of a unigram LM
 # trained on a held-in corpus slice; high-NLL docs are out-of-domain
 # or garbage.  Add-1 smoothing covers OOV words; per-word log-probs
-# round to 6dp BEFORE the per-doc average (the kmeans/_dist2_lit
-# pattern) so the ln() of both engines cannot diverge in the hash.
+# round to 6dp BEFORE the per-doc average (as similarity._cells rounds
+# each distance) so the ln() of both engines cannot diverge in the hash.
 LM_HOLDIN_MOD = 5  # doc_id % 5 != 0 trains the LM; every doc is scored
 
 

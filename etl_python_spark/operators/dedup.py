@@ -60,18 +60,7 @@ def _norm_text(col):
     return F.regexp_replace(F.lower(F.trim(col)), r"\s+", " ")
 
 
-def _shingles(col):
-    """Distinct k-word shingles of the normalized text (JVM lambda).
-
-    NOTE: prefer :func:`with_shingles` in plans — it materializes the
-    token array in its own projection first.  Higher-order-function
-    lambdas run outside whole-stage codegen, so an inline ``split``
-    here would be re-evaluated per element (measured ~5× slowdown)."""
-    toks = F.split(_norm_text(col), " ")
-    return _shingles_from_tokens(toks)
-
-
-def _shingles_from_tokens(toks):
+def _token_shingles(toks):
     n = F.size(toks)
     idx = F.sequence(F.lit(1), F.greatest(n - SHINGLE_K + 1, F.lit(1)))
     sh = F.transform(
@@ -88,7 +77,9 @@ def _shingles_from_tokens(toks):
 
 def with_shingles(docs: DataFrame) -> DataFrame:
     """documents → (doc_id, sh) with the token split materialized once
-    per row before the shingle lambda touches it.
+    per row before the shingle lambda touches it: higher-order-function
+    lambdas run outside whole-stage codegen, so a split inlined into
+    the lambda would be re-evaluated per element (measured ~5× slower).
 
     The scan is repartitioned to the session's parallelism first: the
     shingle pass is CPU-bound per row (regex + split + k-gram
@@ -109,7 +100,7 @@ def with_shingles(docs: DataFrame) -> DataFrame:
     )
     return toked.select(
         "doc_id",
-        _shingles_from_tokens(F.col("toks")).alias("sh"),
+        _token_shingles(F.col("toks")).alias("sh"),
     )
 
 
@@ -839,7 +830,7 @@ def doc_hsets(docs: DataFrame) -> DataFrame:
     )
     hset = F.array_distinct(
         F.transform(
-            _shingles_from_tokens(F.col("toks")),
+            _token_shingles(F.col("toks")),
             lambda s: hash60(s) % HASH_P,
         )
     )

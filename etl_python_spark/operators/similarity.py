@@ -344,19 +344,19 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Corpus-side cell assignment KEEPS the crossJoin + rank-window
     # form.  An argmax PROJECTION over collected centroid literals
-    # (the _kmeans_assign pattern) was landed mid-r16 to drop the
-    # window's n_id exchange, then REVERTED after clean interleaved
-    # A/B (guide §1.1's "the ideal plan is usually slower at first"):
-    # with build costs equalized (one-parse SQL argmin, unspread
-    # 16-row collect) the projection's EXECUTION still ran ~2.6× the
-    # window form (min 1.27 s vs 0.48 s at sf0.1) — the K inlined
-    # interpreted HOF folds per row cost more than the 16×-row
-    # broadcast join + WindowGroupLimit-pruned rank they replace, at
-    # every probe.  Values were bit-identical both ways (oracle
-    # green at 3 SFs for both forms).  The 100 TB serve path does NOT
-    # inline-assign the corpus per query either way — it reads the
-    # materialized posting lists (materialize_ann_index /
-    # _ivf_pq_index, which assign via the projection kernel exactly
+    # (the cosine analogue of array_min over _cells) was landed mid-r16
+    # to drop the window's n_id exchange, then REVERTED after clean
+    # interleaved A/B (guide §1.1's "the ideal plan is usually slower
+    # at first"): with build costs equalized (one-parse literal
+    # argmax, unspread 16-row collect) the projection's EXECUTION
+    # still ran ~2.6× the window form (min 1.27 s vs 0.48 s at sf0.1)
+    # — the K inlined interpreted HOF folds per row cost more than the
+    # 16×-row broadcast join + WindowGroupLimit-pruned rank they
+    # replace, at every probe.  Values were bit-identical both ways
+    # (oracle green at 3 SFs for both forms).  The 100 TB serve path
+    # does NOT inline-assign the corpus per query either way — it reads
+    # the materialized posting lists (materialize_ann_index /
+    # _ivf_pq_index, which assign via array_min over _cells exactly
     # once at build time); this inline assignment is the
     # oracle-restatable single-query form.
     posting = cell_assign(corpus, "n_id", "n_emb", "n_nrm", keep=1)
@@ -486,87 +486,69 @@ def _arr_lit(vals) -> Column:
     return F.expr(_arr_lit_sql(vals))
 
 
-def _dist2_lit(vec_col, centroid: list[float]):
-    """6dp-rounded squared-L2 distance to a centroid LITERAL — the
-    rounding happens before any argmin/rank so the engines' float fold
-    orders can't flip a near-tie."""
-    c = _arr_lit(centroid)
-    return F.round(
-        F.aggregate(
-            F.zip_with(vec_col, c, lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
+def _cells(vec: Column, book) -> Column:
+    """The nearest-centroid kernel of the k-means / IVF / PQ family:
+    ``vec``'s 6dp-rounded squared-L2 distance to every centroid of a
+    constant ``book``, as an array of ``(d2, k)`` structs with ``k``
+    the centroid's 0-based position.  Distances are rounded before any
+    argmin or rank, so the engines' float fold orders cannot flip a
+    near-tie.  Every caller reads the result one way:
+
+    - nearest centroid: ``array_min(cells)`` — structs compare by
+      ``(d2, k)``, so ties go to the lowest ``k``, as the oracles'
+      ``ORDER BY d2, k`` windows break them;
+    - the ``n`` nearest: ``slice(array_sort(cells), 1, n)``;
+    - the runner-up: ``array_min(filter(cells, c -> c.k != best.k))``.
+
+    ``book`` is a list of centroids, spelled as ONE nested array
+    literal (:func:`_arr_lit`: one parser call, and a plan whose size
+    does not grow with the book), or an array column — one subspace's
+    book inside :func:`_pq_cells`' fold over the PQ codebook.  One
+    compact higher-order fold, never K unrolled folds: at 16×16 the
+    unrolled form spent 14 s warm per ``_pq_fit`` call on a 2,000-row
+    corpus, all janino compile and optimizer time (round-11 profile)."""
+    if not isinstance(book, Column):
+        book = _arr_lit(book)
+    return F.transform(
+        book,
+        lambda c, k: F.struct(
+            F.round(
+                F.aggregate(
+                    F.zip_with(vec, c, lambda a, b: (a - b) * (a - b)),
+                    F.lit(0.0),
+                    lambda acc, x: acc + x,
+                ),
+                6,
+            ).alias("d2"),
+            k.alias("k"),
         ),
-        6,
     )
 
 
 def _probe_cells(vec_col, centroids: list[list[float]], n_probe: int):
     """The ``n_probe`` nearest cells for one query vector as an array
-    of (d2, c_id) structs, via array_sort + slice in ONE narrow
-    projection — structs sort by (d2 asc, c_id asc), exactly the
-    former per-query rank window's orderBy, so the selected cells are
-    identical (including ties: lowest c_id wins, matching
+    of :func:`_cells` ``(d2, k)`` structs, via array_sort + slice in
+    ONE narrow projection — structs sort by (d2 asc, k asc), exactly
+    the former per-query rank window's orderBy, so the selected cells
+    are identical (including ties: lowest k wins, matching
     row_number's deterministic order).  Query side only — no q_id
     exchange, no sort, no rank window (guide §2.4); shared by
     :func:`_ivf_fitted_topk` and :func:`_ivf_pq_shortlist`, pinned by
     tests/test_probe_selection.py."""
-    return F.slice(
-        F.array_sort(
-            F.array(
-                *[
-                    F.struct(
-                        _dist2_lit(vec_col, c).alias("d2"),
-                        F.lit(k).alias("c_id"),
-                    )
-                    for k, c in enumerate(centroids)
-                ]
-            )
-        ),
-        1,
-        n_probe,
-    )
-
-
-def _sql_d2_lit(vec_sql: str, centroid: list[float]) -> str:
-    """Spark-SQL string form of :func:`_dist2_lit` — the same
-    zip_with/aggregate fold over the same array literal (identical
-    functions, identical double literals → identical analyzed
-    expressions), emitted as text so a K-wide distance array costs ONE
-    parser call instead of K×dim py4j round trips."""
-    return (
-        f"round(aggregate(zip_with({vec_sql}, {_arr_lit_sql(centroid)}, "
-        f"(a, b) -> (a - b) * (a - b)), 0.0D, (acc, x) -> acc + x), 6)"
-    )
+    return F.slice(F.array_sort(_cells(vec_col, centroids)), 1, n_probe)
 
 
 def _sql_micro_mean_spark(expr: str) -> str:
-    """Spark-SQL string form of :func:`_micro_mean` — operator-for-
-    operator the same expression tree (same literal types, same
-    DECIMAL(38,0) casts, same pmod/division), emitted as text so a
-    dim-wide mean update costs ONE parser call instead of dim×~10
-    py4j round trips (the r16 profile: 2 s of driver-side chatter per
-    Lloyd iteration against 0.5 s of execution)."""
-    micro = f"CAST(FLOOR(({expr}) * 1000000.0D + 0.5D) AS DECIMAL(38,0))"
-    num = f"(SUM({micro}) * 2 + CAST(COUNT(1) AS DECIMAL(38,0)))"
-    den = "(CAST(COUNT(1) AS DECIMAL(38,0)) * 2)"
-    return (
-        f"(CAST(({num} - pmod({num}, {den})) / {den} AS DOUBLE)"
-        f" / 1000000.0D)"
-    )
-
-
-def _micro_mean(val_col):
-    """Order-independent 6dp Lloyd mean update as ONE aggregate
-    expression: quantize each value once to integer micro-units
-    (``FLOOR(x·1e6 + 0.5)`` — exact when the inputs are already 6dp
-    multiples, a single 6dp quantization otherwise), sum as exact
-    BIGINTs, then one round-half-up integer division.  The sum is
-    order-independent, so the mean is bit-identical across engines AND
-    across Spark runs regardless of partition/AQE layout — the round-2
-    integer-cents rule applied to centroid updates.  ``F.round(
-    F.avg(x), 6)`` is NOT safe here: float sums in different orders
-    land on opposite sides of a 6dp boundary (round-10 verdict:
+    """Order-independent 6dp Lloyd mean update as ONE Spark-SQL
+    aggregate expression: quantize each value once to integer
+    micro-units (``FLOOR(x·1e6 + 0.5)`` — exact when the inputs are
+    already 6dp multiples, a single 6dp quantization otherwise), sum
+    as exact integers, then one round-half-up integer division.  The
+    sum is order-independent, so the mean is bit-identical across
+    engines AND across Spark runs regardless of partition/AQE layout —
+    the round-2 integer-cents rule applied to centroid updates.
+    ``F.round(F.avg(x), 6)`` is NOT safe here: float sums in different
+    orders land on opposite sides of a 6dp boundary (round-10 verdict:
     ``ivf_pq_search`` was hash-red and nondeterministic run-to-run
     from exactly that).
 
@@ -576,22 +558,41 @@ def _micro_mean(val_col):
     2c)`` first makes the quotient exactly divisible — no double ever
     touches the sum, so the former ~2^53-micro-unit ulp caveat is
     gone; the quotient itself is a per-dimension mean in micro-units
-    (small), so the final cast to double is exact.  Restate with
-    :func:`_sql_micro_mean`."""
-    micro = F.floor(val_col * F.lit(1e6) + F.lit(0.5)).cast("decimal(38,0)")
-    num = F.sum(micro) * F.lit(2) + F.count(F.lit(1)).cast("decimal(38,0)")
-    den = F.count(F.lit(1)).cast("decimal(38,0)") * F.lit(2)
-    return ((num - F.pmod(num, den)) / den).cast("double") / F.lit(1e6)
+    (small), so the final cast to double is exact.
+
+    Emitted as text so a dim-wide mean update costs ONE parser call
+    instead of dim×~10 py4j round trips (the r16 profile: 2 s of
+    driver-side chatter per Lloyd iteration against 0.5 s of
+    execution).  Restate with :func:`_sql_micro_mean`."""
+    micro = f"CAST(FLOOR(({expr}) * 1000000.0D + 0.5D) AS DECIMAL(38,0))"
+    num = f"(SUM({micro}) * 2 + CAST(COUNT(1) AS DECIMAL(38,0)))"
+    den = "(CAST(COUNT(1) AS DECIMAL(38,0)) * 2)"
+    return (
+        f"(CAST(({num} - pmod({num}, {den})) / {den} AS DOUBLE)"
+        f" / 1000000.0D)"
+    )
+
+
+def _mean_arr(arr: str, n: int) -> Column:
+    """The Lloyd mean update of the ``n``-wide array column ``arr``:
+    an array of ``n`` :func:`_sql_micro_mean_spark` cells built as ONE
+    parsed expression, for one wide hash aggregate per iteration
+    (:func:`_kmeans_fit`, :func:`_pq_fit`)."""
+    return F.expr(
+        "array("
+        + ",".join(_sql_micro_mean_spark(f"{arr}[{i}]") for i in range(n))
+        + ")"
+    )
 
 
 def _sql_micro_mean(expr: str) -> str:
-    """DuckDB restatement of :func:`_micro_mean` — the same exact
-    integer arithmetic, stated inline so it drops into any grouped
-    SELECT.  HUGEINT is 128-bit, a superset of DECIMAL(38,0)'s range;
-    DuckDB ``//`` truncates toward zero, so ``floor`` is recovered by
-    subtracting 1 exactly when the truncated remainder is negative
-    (den > 0, so that is the only inexact-negative case) — no double
-    ever touches the sum, matching the Spark side bit-for-bit."""
+    """DuckDB restatement of :func:`_sql_micro_mean_spark` — the same
+    exact integer arithmetic, stated inline so it drops into any
+    grouped SELECT.  HUGEINT is 128-bit, a superset of DECIMAL(38,0)'s
+    range; DuckDB ``//`` truncates toward zero, so ``floor`` is
+    recovered by subtracting 1 exactly when the truncated remainder is
+    negative (den > 0, so that is the only inexact-negative case) — no
+    double ever touches the sum, matching the Spark side bit-for-bit."""
     s = f"SUM(CAST(FLOOR(({expr}) * 1000000.0 + 0.5) AS HUGEINT))"
     num = f"(2 * {s} + COUNT(*))"
     den = "(2 * COUNT(*))"
@@ -604,25 +605,18 @@ def _sql_micro_mean(expr: str) -> str:
 def _kmeans_assign(emb: DataFrame, centroids: list[list[float]]) -> DataFrame:
     """Squared-L2 argmin against the K current centroids, evaluated as
     broadcast literals inside one projection (no join, no shuffle for
-    the small side); distances rounded to 6dp before the argmin so the
-    tie-break (lowest cluster id) is engine-agnostic.
+    the small side): ``array_min`` over :func:`_cells`, so distances
+    are rounded to 6dp before the argmin and the tie-break (lowest
+    cluster id) is engine-agnostic.
 
-    The K-wide distance array is built as ONE parsed expression
-    (:func:`_sql_d2_lit` — K×dim py4j literal round-trips were the
-    dominant driver-side cost of every fit iteration, r16 profile) and
-    lands in its own projection, so argmin/min/dist2 read the computed
-    array attribute instead of re-inlining K interpreted HOF folds per
-    consumer — same rounded distances, same tie-break, bit-identical
-    assignment."""
-    d_sql = "array(" + ",".join(_sql_d2_lit("v", c) for c in centroids) + ")"
+    The nearest ``(d2, k)`` struct lands in its own projection, so
+    ``cluster`` and ``dist2`` read the computed attribute instead of
+    re-inlining the K-centroid fold per consumer."""
     return (
-        emb.withColumn("_d", F.expr(d_sql))
-        .withColumn(
-            "cluster",
-            F.expr("cast(array_position(_d, array_min(_d)) as int) - 1"),
-        )
-        .withColumn("dist2", F.array_min("_d"))
-        .drop("_d")
+        emb.withColumn("_b", F.array_min(_cells(F.col("v"), centroids)))
+        .withColumn("cluster", F.col("_b.k"))
+        .withColumn("dist2", F.col("_b.d2"))
+        .drop("_b")
     )
 
 
@@ -674,7 +668,7 @@ def q_kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
       evaluated as broadcast literals inside one projection (no join,
       no shuffle for the small side);
     - update: ONE wide hash aggregate keyed by cluster with dim
-      :func:`_micro_mean` columns — partial aggregation map-side,
+      :func:`_sql_micro_mean_spark` cells — partial aggregation map-side,
       one shuffle of K rows, then K×dim cells fold back to K
       centroid arrays on the driver (the same kilobyte-sized
       driver round-trip any Lloyd's implementation does per step).
@@ -682,7 +676,7 @@ def q_kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     Deterministic throughout: init = first K vectors, distances
     rounded to 6dp before the argmin tie-break on cluster id, and the
     centroid mean updates computed with the order-independent integer
-    micro-unit rule (:func:`_micro_mean`, round 11 — a 6dp-rounded
+    micro-unit rule (:func:`_sql_micro_mean_spark`, round 11 — a 6dp-rounded
     float AVG can land on opposite sides of the rounding boundary as
     summation order shifts between engines or Spark runs), so the
     WHOLE 3-iteration fit carries a full DuckDB value oracle
@@ -702,8 +696,8 @@ def _kmeans_fit(emb: DataFrame) -> list[list[float]]:
     determinism contract).  Returns the final K centroids — the coarse
     quantizer both the cluster report and the fitted IVF index share.
 
-    The mean step is ONE wide hash aggregate — dim :func:`_micro_mean`
-    columns keyed by cluster — instead of the earlier ``posexplode`` →
+    The mean step is ONE wide hash aggregate — :func:`_mean_arr`'s dim
+    cells keyed by cluster — instead of the earlier ``posexplode`` →
     (cluster, pos) aggregate → (cluster) ``collect_list`` re-aggregate:
     the same exact integer arithmetic per (cluster, dim) cell (so every
     centroid double is bit-identical and the oracle CTEs are untouched),
@@ -714,12 +708,7 @@ def _kmeans_fit(emb: DataFrame) -> list[list[float]]:
     cells per row map-side).  Measured at sf0.1: Lloyd iteration
     2.0 s → 0.6 s (single-pass)."""
     centroids = _kmeans_init(emb)
-    dim = len(centroids[0])
-    mean_arr = F.expr(
-        "array("
-        + ",".join(_sql_micro_mean_spark(f"v[{i}]") for i in range(dim))
-        + ")"
-    ).alias("c")
+    mean_arr = _mean_arr("v", len(centroids[0])).alias("c")
     for _ in range(KMEANS_ITERS):
         assigned = _kmeans_assign(emb, centroids)
         means = assigned.groupBy("cluster").agg(mean_arr).collect()
@@ -792,7 +781,7 @@ def _ivf_fitted_topk(
             _norm(F.col("v")).alias("q_nrm"),
             F.explode(cells_sorted).alias("dc"),
         )
-        .select("q_id", "q_emb", "q_nrm", F.col("dc.c_id").alias("c_id"))
+        .select("q_id", "q_emb", "q_nrm", F.col("dc.k").alias("c_id"))
     )
 
     cand = posting.join(F.broadcast(probes), "c_id").filter(
@@ -1109,34 +1098,46 @@ def _pq_codebook(
     ]
 
 
-def _pq_assign(emb: DataFrame, codebook) -> DataFrame:
-    """(vec_id, m, code, err2): per-subspace argmin against the
-    constant codebook literal — ONE projection + explode, no join, no
-    shuffle (the same broadcast-literal pattern as
-    :func:`_kmeans_assign`); distances are 6dp-rounded before the
-    argmin, ties break toward the lowest code.  Subspace count and
-    width are derived from the codebook shape; the kernel is a compact
-    HOF fold (:func:`_cb_lit`) so generated-code size is independent
-    of M×KS."""
+def _pq_cells(vec: Column, codebook) -> Column:
+    """:func:`_cells` per subspace: element ``m`` holds the m-th
+    length-dsub subvector's ``(d2, k)`` cells against ``codebook[m]``.
+    The whole codebook is ONE nested array literal (``lit[m][k][i]``,
+    :func:`_arr_lit`) that Catalyst constant-folds into a single
+    Literal, so the fold's generated-code size does not grow with
+    M×KS."""
+    dsub = len(codebook[0][0])
+    return F.transform(
+        _arr_lit(codebook),
+        lambda book, m: _cells(_sub_m(vec, m, dsub), book),
+    )
+
+
+def _pq_assign(emb: DataFrame, codebook, *cols: str) -> DataFrame:
+    """One row per (vector, subspace) with the columns ``cols``, drawn
+    from ``vec_id``, ``m``, ``code`` (the nearest code: ``array_min``
+    over :func:`_pq_cells`, ties toward the lowest code), ``err2`` (its
+    6dp-rounded squared-L2 distance) and ``s`` (the subvector) — ONE
+    projection + explode against the constant codebook literal, no
+    join, no shuffle.  The explode carries only the fields asked for:
+    the fit's mean step reads (m, code, s) and never joins assignment
+    back to the corpus (the join would shuffle corpus×M rows), which
+    keeps a Lloyd iteration at one corpus scan, the same contract as
+    :func:`_kmeans_fit`."""
     dsub = len(codebook[0][0])
 
-    def entry(book: Column, m: Column) -> Column:
-        d = F.transform(
-            book, lambda c: _dist2_hof(_sub_m(F.col("v"), m, dsub), c)
-        )
-        return F.struct(
-            m.cast("int").alias("m"),
-            (F.array_position(d, F.array_min(d)) - 1).cast("int").alias("code"),
-            F.array_min(d).alias("err2"),
-        )
+    def entry(cells: Column, m: Column) -> Column:
+        best = F.array_min(cells)
+        field = {
+            "m": m,
+            "code": best["k"],
+            "err2": best["d2"],
+            "s": _sub_m(F.col("v"), m, dsub),
+        }
+        return F.struct(*[field[c].alias(c) for c in cols if c in field])
 
-    entries = F.transform(_cb_lit(codebook), entry)
-    return emb.select("vec_id", F.explode(entries).alias("e")).select(
-        "vec_id",
-        F.col("e.m").alias("m"),
-        F.col("e.code").alias("code"),
-        F.col("e.err2").alias("err2"),
-    )
+    ids = [c for c in cols if c == "vec_id"]
+    entries = F.transform(_pq_cells(F.col("v"), codebook), entry)
+    return emb.select(*ids, F.explode(entries).alias("e")).select(*ids, "e.*")
 
 
 def q_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1146,7 +1147,7 @@ def q_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic — the shape that turns a 100 TB float corpus into a
     compact code table once, reused by every query batch."""
     emb = _kmeans_emb(spark, sf_dir)
-    return _pq_assign(emb, _pq_codebook(emb))
+    return _pq_assign(emb, _pq_codebook(emb), "vec_id", "m", "code", "err2")
 
 
 def q_ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1159,23 +1160,23 @@ def q_ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     ascending approximate distance with the id tie-break."""
     emb = _kmeans_emb(spark, sf_dir)
     cb = _pq_codebook(emb)
-    posting = _pq_assign(emb, cb).select(
-        F.col("vec_id").alias("n_id"), "m", "code"
+    posting = _pq_assign(emb, cb, "vec_id", "m", "code").withColumnRenamed(
+        "vec_id", "n_id"
     )
-    entries = []
-    for m in range(PQ_M):
-        sub = F.slice(F.col("v"), m * PQ_DSUB + 1, PQ_DSUB)
-        for k, c in enumerate(cb[m]):
-            entries.append(
-                F.struct(
-                    F.lit(m).alias("m"),
-                    F.lit(k).alias("code"),
-                    _dist2_lit(sub, c).alias("d2"),
-                )
-            )
+    entries = F.flatten(
+        F.transform(
+            _pq_cells(F.col("v"), cb),
+            lambda cells, m: F.transform(
+                cells,
+                lambda c: F.struct(
+                    m.alias("m"), c["k"].alias("code"), c["d2"].alias("d2")
+                ),
+            ),
+        )
+    )
     lut = (
         emb.filter(F.col("vec_id") < N_QUERY)
-        .select(F.col("vec_id").alias("q_id"), F.explode(F.array(*entries)).alias("e"))
+        .select(F.col("vec_id").alias("q_id"), F.explode(entries).alias("e"))
         .select("q_id", "e.m", "e.code", "e.d2")
     )
     cand = posting.join(F.broadcast(lut), ["m", "code"]).filter(
@@ -1287,48 +1288,10 @@ IVFPQ_DSUB = EMB_DIM // IVFPQ_M
 PQ_FIT_ITERS = 2
 
 
-def _cb_lit(cb) -> Column:
-    """The whole PQ codebook as ONE nested array literal
-    (``lit[m][k][i]``) — Catalyst constant-folds it into a single
-    Literal, so the kernels below are COMPACT higher-order folds whose
-    generated-code size is independent of M×KS.  The unrolled
-    alternative (M×KS separate :func:`_dist2_lit` aggregates inside
-    one projection) is the shape the janino 64KB method budget
-    punishes: at 16×16 it spent 14 s warm per ``_pq_fit`` call on a
-    2,000-row corpus — all compile/optimizer time, not data
-    (round-11 profile).  Built through :func:`_arr_lit` (one parser
-    call) — the element-wise construction additionally cost ~1 s of
-    py4j chatter per call at 16×16×4 (r16 profile)."""
-    return _arr_lit(cb)
-
-
-def _dist2_hof(sub: Column, cent: Column) -> Column:
-    """6dp-rounded squared-L2 between two ARRAY COLUMNS — bit-identical
-    arithmetic to :func:`_dist2_lit` (same zip_with fold order, same
-    rounding); the centroid arrives as an element of the constant
-    codebook literal instead of a per-centroid literal."""
-    return F.round(
-        F.aggregate(
-            F.zip_with(sub, cent, lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-        6,
-    )
-
-
 def _sub_m(vec: Column, m: Column, dsub: int) -> Column:
     """The m-th length-``dsub`` subvector (m is the 0-based transform
     index column)."""
     return F.slice(vec, m * F.lit(dsub) + F.lit(1), dsub)
-
-
-def _argmin_code(sub: Column, book: Column) -> Column:
-    """Argmin code of ``sub`` against one subspace's codebook array —
-    6dp-rounded distances, lowest-code tie-break, exactly like the
-    unrolled :func:`_pq_assign` argmin."""
-    d = F.transform(book, lambda c: _dist2_hof(sub, c))
-    return (F.array_position(d, F.array_min(d)) - 1).cast("int")
 
 
 def _unit_emb(emb: DataFrame) -> DataFrame:
@@ -1363,28 +1326,6 @@ def _unit_emb(emb: DataFrame) -> DataFrame:
     )
 
 
-def _pq_assign_sub(emb: DataFrame, cb) -> DataFrame:
-    """(m, code, s): per-subspace argmin assignment CARRYING the
-    subvector, in one projection — the fit's mean step never joins
-    assignment back to the corpus (the join would shuffle corpus×M
-    rows; this shape keeps Lloyd's per-iteration cost at exactly one
-    corpus scan, the same contract as :func:`_kmeans_fit`).  One
-    compact HOF fold over the constant codebook literal
-    (:func:`_cb_lit`), not M×KS unrolled aggregates."""
-    dsub = len(cb[0][0])
-    entries = F.transform(
-        _cb_lit(cb),
-        lambda book, m: F.struct(
-            m.cast("int").alias("m"),
-            _argmin_code(_sub_m(F.col("v"), m, dsub), book).alias("code"),
-            _sub_m(F.col("v"), m, dsub).alias("s"),
-        ),
-    )
-    return emb.select(F.explode(entries).alias("e")).select(
-        F.col("e.m").alias("m"), F.col("e.code").alias("code"), F.col("e.s").alias("s")
-    )
-
-
 def _pq_fit(emb: DataFrame, cb=None):
     """PQ_FIT_ITERS rounds of per-subspace Lloyd's from the sample-
     codebook init — the trained product quantizer of a real IVF×PQ
@@ -1392,32 +1333,28 @@ def _pq_fit(emb: DataFrame, cb=None):
     standalone PQ queries keep for oracle brevity).  All subspaces
     fit simultaneously in one corpus scan per iteration (assignment
     carries the subvector; means are one wide hash aggregate keyed on
-    (m, code) with dsub :func:`_micro_mean` columns); M×KS×DSUB floats
+    (m, code) with dsub :func:`_mean_arr` cells); M×KS×DSUB floats
     come to the driver per iteration — kilobytes, the same round-trip
-    as the coarse k-means fit.  Mean updates use the order-independent :func:`_micro_mean`
-    exactly like :func:`_kmeans_fit` so the oracle restates every
-    iteration bit-identically; an empty (m, code) cell keeps its
-    previous code vector."""
+    as the coarse k-means fit.  Mean updates use the order-independent
+    :func:`_sql_micro_mean_spark` exactly like :func:`_kmeans_fit` so
+    the oracle restates every iteration bit-identically; an empty
+    (m, code) cell keeps its previous code vector."""
     if cb is None:
         cb = _pq_codebook(emb, IVFPQ_M, IVFPQ_KS)
     ks = len(cb[0])
     m_parts = len(cb)
-    dsub = len(cb[0][0])
     # One wide hash aggregate keyed by (m, code) — an array of dsub
-    # _micro_mean cells built as ONE parsed expression — instead of
+    # micro-mean cells built as ONE parsed expression — instead of
     # posexplode → (m, code, pos) aggregate → (m, code) collect_list
     # re-aggregate: bit-identical cell values (same exact integer
     # arithmetic over the same multisets), one Exchange per iteration
     # instead of two, dsub× fewer shuffle input rows, and the update
     # stays in whole-stage codegen (guide §2.3; measured at sf0.1:
     # PQ iteration 2.5 s → 0.9 s single-pass).
-    mean_arr = F.expr(
-        "array("
-        + ",".join(_sql_micro_mean_spark(f"s[{i}]") for i in range(dsub))
-        + ")"
-    ).alias("cs")
+    mean_arr = _mean_arr("s", len(cb[0][0])).alias("cs")
     for _ in range(PQ_FIT_ITERS):
-        rows = _pq_assign_sub(emb, cb).groupBy("m", "code").agg(mean_arr).collect()
+        assigned = _pq_assign(emb, cb, "m", "code", "s")
+        rows = assigned.groupBy("m", "code").agg(mean_arr).collect()
         new = {(r["m"], r["code"]): list(r["cs"]) for r in rows}
         cb = [
             [new.get((m, k), cb[m][k]) for k in range(ks)]
@@ -1434,18 +1371,13 @@ def _ivf_pq_index(uemb: DataFrame, centroids: list[list[float]], cb) -> DataFram
     cell, M small ints — ARE the persisted index
     (:func:`materialize_ann_index` publishes them through the txn
     layer; raw floats never enter the serving scan)."""
-    dsub = len(cb[0][0])
-    cell_d = F.array(*[_dist2_lit(F.col("rv"), c) for c in centroids])
     celled = uemb.select(
         F.col("vec_id").alias("n_id"),
-        (F.array_position(cell_d, F.array_min(cell_d)) - 1)
-        .cast("int")
-        .alias("c_id"),
+        F.array_min(_cells(F.col("rv"), centroids))["k"].alias("c_id"),
         "v",
     )
     codes_arr = F.transform(
-        _cb_lit(cb),
-        lambda book, m: _argmin_code(_sub_m(F.col("v"), m, dsub), book),
+        _pq_cells(F.col("v"), cb), lambda cells: F.array_min(cells)["k"]
     )
     return celled.select("n_id", "c_id", codes_arr.alias("codes"))
 
@@ -1482,7 +1414,6 @@ def _ivf_pq_shortlist(
     engines and across Spark runs (round-10 verdict: the float
     ``ROUND(SUM(d2), 6)`` here could flip a 6dp boundary)."""
     ks = len(cb[0])
-    dsub = len(cb[0][0])
 
     # The stored index rows (:func:`_ivf_pq_index`) — built inline
     # from the corpus here, or passed in from a txn snapshot by the
@@ -1507,13 +1438,9 @@ def _ivf_pq_shortlist(
     cells_sorted = _probe_cells(F.col("rv"), centroids, N_PROBE)
     lut_arr = F.flatten(
         F.transform(
-            _cb_lit(cb),
-            lambda book, m: F.transform(
-                book,
-                lambda c: F.floor(
-                    _dist2_hof(_sub_m(F.col("v"), m, dsub), c) * F.lit(1e6)
-                    + F.lit(0.5)
-                ),
+            _pq_cells(F.col("v"), cb),
+            lambda cells: F.transform(
+                cells, lambda c: F.floor(c["d2"] * F.lit(1e6) + F.lit(0.5))
             ),
         )
     )
@@ -1527,7 +1454,7 @@ def _ivf_pq_shortlist(
             lut_arr.alias("lut"),
             F.explode(cells_sorted).alias("dc"),
         )
-        .select("q_id", F.col("dc.c_id").alias("c_id"), "lut")
+        .select("q_id", F.col("dc.k").alias("c_id"), "lut")
     )
 
     # Candidate scoring: broadcast-join the (query, probed-cell, LUT)
@@ -2602,17 +2529,10 @@ def q_kmeans_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     point and aggregates as exact integer sums (sum-order rule), with
     the mean derived from the sum by one identical floor division."""
     emb = _kmeans_emb(spark, sf_dir)
-    centroids = _kmeans_fit(emb)
-    cells = F.array(
-        *[
-            F.struct(
-                _dist2_lit(F.col("v"), c).alias("d2"), F.lit(k).alias("k")
-            )
-            for k, c in enumerate(centroids)
-        ]
-    )
+    celled = emb.select(_cells(F.col("v"), _kmeans_fit(emb)).alias("cells"))
+    cells = F.col("cells")
     asg = F.array_min(cells)  # struct order = (d2, k): lowest-k tie-break
-    scored = emb.select(
+    scored = celled.select(
         asg["k"].alias("cluster"),
         F.sqrt(asg["d2"]).alias("a"),
         F.sqrt(
@@ -2787,7 +2707,7 @@ def q_pq_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
     6dp-rounded per-row errors quantize to exact micro-units before
     the sum (sum-order rule), mean by one identical floor division."""
     emb = _kmeans_emb(spark, sf_dir)
-    codes = _pq_assign(emb, _pq_codebook(emb))
+    codes = _pq_assign(emb, _pq_codebook(emb), "m", "code", "err2")
     err_micro = F.floor(
         F.col("err2") * F.lit(1e6) + F.lit(0.5)
     ).cast("long")
@@ -2838,17 +2758,7 @@ def q_cluster_label_nmi(spark: SparkSession, sf_dir: str) -> DataFrame:
         "label",
     )
     centroids = _kmeans_fit(base.select("vec_id", "v"))
-    cells_arr = F.array(
-        *[
-            F.struct(
-                _dist2_lit(F.col("v"), c).alias("d2"), F.lit(k).alias("k")
-            )
-            for k, c in enumerate(centroids)
-        ]
-    )
-    assigned = base.select(
-        F.array_min(cells_arr)["k"].alias("cluster"), "label"
-    )
+    assigned = _kmeans_assign(base, centroids).select("cluster", "label")
     # K×L rows; five consumers (nk, nl, nn, joint, purity) — without
     # the checkpoint each one re-runs the corpus argmin projection +
     # cell aggregate (the before-plan held five scan subtrees).

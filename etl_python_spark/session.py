@@ -46,6 +46,12 @@ def get_spark(
       them all and ran the new classes in the JVM interpreter again.
       A one-shot run (one cycle, as ``lifecycle_sf0.01`` is) gains
       nothing from it.
+    - ``spark.sql.legacy.parquet.nanosAsLong`` on from the start, so a
+      parquet INT64 nanosecond timestamp reads as a long that
+      ``sources.tables.normalize_event_ts`` converts.  Set once here,
+      never mid-session: every schema the session infers, and the
+      cache ``sources.tables.table_schema`` keeps, is inferred under
+      the same value.
     """
     # the host's usable cores unless SPARK_GRAFT_CPUS pins a count
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
@@ -61,6 +67,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # columnar parquet reads + pushdown are defaults; pin anyway so
         # a misconfigured cluster profile can't silently disable them
         .config("spark.sql.parquet.filterPushdown", "true")

@@ -33,7 +33,8 @@ def normalize_event_ts(df: DataFrame, col: str = "ts") -> DataFrame:
     """Normalize the events ``ts`` column to a plain TimestampType for
     every physical shape the testdata has shipped in:
 
-    - INT64 epoch-nanos (read via the legacy nanosAsLong conf) →
+    - INT64 epoch-nanos (read as a long under the legacy nanosAsLong
+      conf, which ``session.get_spark`` sets) →
       integer ``ts DIV 1000`` then ``timestamp_micros``.  Integer
       division, NOT ``F.floor(col / 1000)`` — ``/`` on a long promotes
       to float64, which has 53 mantissa bits and silently rounds
@@ -57,12 +58,10 @@ def normalize_event_ts(df: DataFrame, col: str = "ts") -> DataFrame:
     return df
 
 
-NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
-
-# (absolute path, nanosAsLong) -> (file-set fingerprint, inferred schema).
-# Process-wide: an entry depends only on the files and the conf, and two
-# threads racing on a miss both infer and store the same value.
-_SCHEMAS: dict[tuple[str, str], tuple[str, StructType]] = {}
+# absolute path -> (file-set fingerprint, inferred schema).  Process-wide:
+# an entry depends only on the files, and two threads racing on a miss
+# both infer and store the same value.
+_SCHEMAS: dict[str, tuple[str, StructType]] = {}
 
 
 def table_schema(spark: SparkSession, sf_dir: str, name: str) -> StructType | None:
@@ -71,20 +70,19 @@ def table_schema(spark: SparkSession, sf_dir: str, name: str) -> StructType | No
     Inference is one Spark job per read (sf0.1 ``lineitem``, 4 CPUs,
     warm: 25-35 ms, against 2-6 ms for a read with a given schema).
     The cached schema is keyed on the table's file-set fingerprint
-    (relpath, size, mtime_ns of every part file, ``corpus_fingerprint``)
-    and the ``nanosAsLong`` value it was inferred under, so a rewritten or appended table is
-    re-inferred, never read with a stale schema.  ``None`` when the path
-    is not on the local file system (nothing to fingerprint): the caller
-    reads it with inference, as before."""
+    (relpath, size, mtime_ns of every part file, ``corpus_fingerprint``),
+    so a rewritten or appended table is re-inferred, never read with a
+    stale schema.  ``None`` when the path is not on the local file
+    system (nothing to fingerprint): the caller reads it with
+    inference, as before."""
     path = os.path.abspath(os.path.join(sf_dir, f"{name}.parquet"))
     try:
         fp = corpus_fingerprint(sf_dir, name)
     except FileNotFoundError:
         return None
-    key = (path, spark.conf.get(NANOS_AS_LONG, "false"))
-    hit = _SCHEMAS.get(key)
+    hit = _SCHEMAS.get(path)
     if hit is None or hit[0] != fp:
-        hit = _SCHEMAS[key] = (fp, spark.read.parquet(path).schema)
+        hit = _SCHEMAS[path] = (fp, spark.read.parquet(path).schema)
     return hit[1]
 
 
@@ -100,8 +98,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     including watermarked streaming — see one consistent type.
     """
     path = os.path.join(sf_dir, f"{name}.parquet")
-    if name == "events":
-        spark.conf.set(NANOS_AS_LONG, "true")
     schema = table_schema(spark, sf_dir, name)
     df = (spark.read if schema is None else spark.read.schema(schema)).parquet(path)
     return normalize_event_ts(df) if name == "events" else df

@@ -24,7 +24,6 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     require plain TimestampType)."""
     from ..sources.tables import normalize_event_ts
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     return normalize_event_ts(_table_stream(spark, sf_dir, "events"))
 
 

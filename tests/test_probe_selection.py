@@ -40,7 +40,7 @@ def _selected(spark):
                 S._probe_cells(F.col("v"), CENTROIDS, N_PROBE)
             ).alias("dc"),
         )
-        .select("vec_id", F.col("dc.c_id").alias("c_id"))
+        .select("vec_id", F.col("dc.k").alias("c_id"))
         .collect()
     )
     out: dict[int, list[int]] = {}
@@ -55,23 +55,15 @@ def _window_reference(spark):
     from etl_python_spark.operators import similarity as S
 
     df = spark.createDataFrame(VECS, "vec_id int, v array<double>")
-    cells = F.array(
-        *[
-            F.struct(
-                S._dist2_lit(F.col("v"), c).alias("d2"),
-                F.lit(k).alias("c_id"),
-            )
-            for k, c in enumerate(CENTROIDS)
-        ]
-    )
+    cells = S._cells(F.col("v"), CENTROIDS)
     w = Window.partitionBy("vec_id").orderBy(
-        F.col("dc.d2").asc(), F.col("dc.c_id").asc()
+        F.col("dc.d2").asc(), F.col("dc.k").asc()
     )
     rows = (
         df.select("vec_id", F.explode(cells).alias("dc"))
         .withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= N_PROBE)
-        .select("vec_id", F.col("dc.c_id").alias("c_id"), "rnk")
+        .select("vec_id", F.col("dc.k").alias("c_id"), "rnk")
         .collect()
     )
     out: dict[int, list[int]] = {}
@@ -91,6 +83,33 @@ def test_probe_cells_match_rank_window_under_ties(spark):
     # And the untied query's order is the strict d2 order:
     assert got[2] == [0, 1, 3]
 
+    # The nearest cell, array_min over the cells, is the former spelling
+    # array_position(d, array_min(d)) - 1 over a bare distance array.
+    from etl_python_spark.operators import similarity as S
+
+    d = F.array(
+        *[
+            F.round(
+                F.aggregate(
+                    F.zip_with(
+                        "v", F.array(*map(F.lit, c)), lambda a, b: (a - b) * (a - b)
+                    ),
+                    F.lit(0.0),
+                    lambda acc, x: acc + x,
+                ),
+                6,
+            )
+            for c in CENTROIDS
+        ]
+    )
+    nearest = spark.createDataFrame(VECS, "vec_id int, v array<double>").select(
+        "vec_id",
+        F.array_min(S._cells(F.col("v"), CENTROIDS))["k"].alias("k"),
+        (F.array_position(d, F.array_min(d)) - 1).cast("int").alias("ref"),
+    ).collect()
+    assert [r.k for r in nearest] == [r.ref for r in nearest]
+    assert {r.vec_id: r.k for r in nearest} == {0: 0, 1: 0, 2: 0, 3: 2}
+
 
 def test_probe_cells_count_and_bounds(spark):
     """slice(…, 1, n_probe) must return exactly n_probe cells with
@@ -105,4 +124,4 @@ def test_probe_cells_count_and_bounds(spark):
     ).collect()
     for r in rows:
         assert r.sz == n
-        assert sorted(dc.c_id for dc in r.cells) == list(range(n))
+        assert sorted(dc.k for dc in r.cells) == list(range(n))

@@ -15,8 +15,9 @@ def _reprs(values):
 
 
 def test_arr_lit_matches_elementwise_lit_on_non_finite_values(spark):
-    """``_arr_lit`` and ``_sql_d2_lit`` spell NaN and ±Infinity so that
-    Spark parses back the doubles an element-wise ``F.lit`` builds."""
+    """``_arr_lit``, and ``_cells`` over a book holding them, spell NaN
+    and ±Infinity so that Spark parses back the doubles an element-wise
+    ``F.lit`` builds."""
     from etl_python_spark.operators import similarity as S
 
     one = spark.range(1)
@@ -34,9 +35,9 @@ def test_arr_lit_matches_elementwise_lit_on_non_finite_values(spark):
 
     # one-element centroids: the squared distance from 0.0 to each value
     vec = one.select(F.array(F.lit(0.0)).alias("v"))
-    got = vec.select(
-        *[F.expr(S._sql_d2_lit("v", [x])).alias(f"d{i}") for i, x in enumerate(SPECIAL)]
-    ).first()
+    cells = vec.select(S._cells(F.col("v"), [[x] for x in SPECIAL]).alias("c")).first()
+    assert [c.k for c in cells.c] == list(range(len(SPECIAL)))
+    got = [c.d2 for c in cells.c]
     ref = vec.select(
         *[
             F.round(

@@ -140,3 +140,22 @@ def test_nanos_events_normalize_to_timestamp(spark, tmp_path):
         assert df.schema["ts"].dataType == TimestampType()
         got = df.selectExpr("id", "unix_micros(ts)").orderBy("id").collect()
         assert [tuple(r) for r in got] == [(1, ns[0] // 1000), (2, ns[1] // 1000)]
+
+
+def test_second_register_views_runs_no_job(spark):
+    # Reading events used to set nanosAsLong mid-session, which keyed
+    # the schema cache anew: a second register_views re-inferred 7 tables
+    from etl_python_spark.sources.tables import register_views
+
+    sc = spark.sparkContext
+    conf = "spark.sql.legacy.parquet.nanosAsLong"
+    assert spark.conf.get(conf) == "true"  # set once, by get_spark
+    register_views(spark, SF_SMOKE)
+    sc.setJobGroup("register_views_again", "warm register_views", False)
+    try:
+        register_views(spark, SF_SMOKE)
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert spark.conf.get(conf) == "true"
+    assert list(sc.statusTracker().getJobIdsForGroup("register_views_again")) == []
