@@ -20,7 +20,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.numeric import cents
-from ..sources.tables import load_table, range_parts
+from ..functions.prefix import ntile, prefix_sums
+from ..sources.tables import load_table
 
 
 def _q6(col):
@@ -228,48 +229,6 @@ FROM cells
 # RFM segmentation (recency / frequency / monetary quintiles)
 # ---------------------------------------------------------------------------
 
-def _ntile5_two_phase(df: DataFrame, order_cols, out_name: str) -> DataFrame:
-    """Exact global NTILE(5) over a fully tie-broken order without a
-    single-task sort (the pareto_abc / training_shuffle two-phase
-    pattern): range-repartition on the order key (pinned with
-    localCheckpoint so the count job and the consume job see ONE
-    consistent partitioning), per-partition row_number in parallel,
-    per-partition counts (a range_parts-row driver list — bounded
-    metadata) become broadcast offsets, and NTILE's bucket is the
-    closed form of the global position and n — the first n%5 buckets
-    hold ceil(n/5) rows, the rest floor(n/5), exactly the engines'
-    NTILE semantics.  The partition count tracks the session's cores
-    (r16 verdict item 5); the closed form is partition-count-
-    independent, so any count returns identical quintiles.
-    """
-    ranged = (
-        df.repartitionByRange(range_parts(df), *order_cols)
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
-    )
-    w_local = Window.partitionBy("_pid").orderBy(*order_cols)
-    local = ranged.withColumn("_rn", F.row_number().over(w_local))
-    counts = ranged.groupBy("_pid").agg(F.count(F.lit(1)).alias("n")).collect()
-    counts.sort(key=lambda r: r["_pid"])
-    offsets, acc = [], 0
-    for r in counts:
-        offsets.append((r["_pid"], acc))
-        acc += r["n"]
-    off_df = df.sparkSession.createDataFrame(offsets, "_pid int, _offset long")
-    q, rem = divmod(acc, 5)
-    thresh = rem * (q + 1)
-    bucket = (
-        f"CAST(IF(_pos <= {thresh}, (_pos - 1) DIV {q + 1}, "
-        f"{rem} + (_pos - 1 - {thresh}) DIV {max(q, 1)}) + 1 AS INT)"
-    )
-    return (
-        local.join(F.broadcast(off_df), "_pid")
-        .withColumn("_pos", F.col("_offset") + F.col("_rn"))
-        .withColumn(out_name, F.expr(bucket))
-        .drop("_pid", "_rn", "_offset", "_pos")
-    )
-
-
 def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Classic RFM: per customer the days since last order (anchored
     at the dataset's max order date, the reference's date-window
@@ -278,13 +237,12 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     tie-broken global order (metric, then c_custkey, so the quintile
     assignment is deterministic and engine-identical).
 
-    Scale shape: one shuffle for the per-customer aggregate, then
-    three exact two-phase global NTILEs (`_ntile5_two_phase`) — no
-    task ever sorts the whole customer-grain relation; each dimension
-    is a range shuffle + parallel local window + broadcast offset
-    join.  The oracle restates the plain global NTILE, proving the
-    decomposition assigns the identical quintiles.  R scores 5=most
-    recent, F/M score 5=highest.
+    Scale shape: one shuffle for the per-customer aggregate, then per
+    dimension the global position from ``prefix_sums`` and the closed
+    form ``ntile(position, n, 5)`` — no task ever sorts the whole
+    customer-grain relation.  The oracle restates the plain global
+    NTILE, proving the decomposition assigns the identical quintiles.
+    R scores 5=most recent, F/M score 5=highest.
     """
     o = load_table(spark, sf_dir, "orders")
     anchor = o.agg(F.max("o_orderdate").alias("mx")).collect()[0]["mx"]
@@ -296,21 +254,17 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("frequency"),
         F.sum(cents(F.col("o_totalprice"))).alias("monetary_c"),
     )
-    scored = _ntile5_two_phase(
-        per_cust,
-        [F.asc("recency_days"), F.asc("o_custkey")],
-        "_nt_r",
-    )
-    scored = _ntile5_two_phase(
-        scored,
-        [F.desc("frequency"), F.asc("o_custkey")],
-        "_nt_f",
-    )
-    scored = _ntile5_two_phase(
-        scored,
-        [F.desc("monetary_c"), F.asc("o_custkey")],
-        "_nt_m",
-    )
+    scored = per_cust
+    for out, order in (
+        ("_nt_r", [F.asc("recency_days"), F.asc("o_custkey")]),
+        ("_nt_f", [F.desc("frequency"), F.asc("o_custkey")]),
+        ("_nt_m", [F.desc("monetary_c"), F.asc("o_custkey")]),
+    ):
+        pos, totals = prefix_sums(scored, order, {"_pos": F.lit(1)})
+        scored = pos.select(
+            *scored.columns,
+            ntile(F.col("_pos"), F.lit(totals[()]["_pos"]), 5).alias(out),
+        )
     scored = scored.select(
         "o_custkey",
         "recency_days",

@@ -14,7 +14,8 @@ from ..functions.dates import (
     week_of_month,
 )
 from ..functions.numeric import dsum
-from ..sources.tables import load_table, range_parts
+from ..functions.prefix import ntile, prefix_sums
+from ..sources.tables import load_table
 
 
 # ---------------------------------------------------------------------------
@@ -489,16 +490,13 @@ def q_customer_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: a per-nation window would sort each nation's whole
     customer-grain rollup in ONE task (25 nations = 25 reducers at
-    any scale), so the NTILE is two-phase — range-repartition on
-    (nation, fat DESC, custkey), per-(nation, partition) row_number
-    in parallel, a (nations x partitions)-row count collect becomes
-    broadcast per-nation offsets + totals, and NTILE's bucket is the
-    closed form of the in-nation position and n (the first n%4
-    buckets hold ceil(n/4) rows, exactly the engines' semantics).
-    The nation median is the same Percentile aggregate the window
-    used (order-insensitive: it sorts its buffer at eval), grouped
-    and broadcast back.  The oracle keeps the plain windowed NTILE +
-    median, proving the decomposition is identical."""
+    any scale), so the in-nation position and n come from a
+    per-nation ``prefix_sums`` and the quartile is the closed form
+    ``ntile(position, n, 4)``.  The nation median is the same
+    Percentile aggregate the window used (order-insensitive: it sorts
+    its buffer at eval), grouped over the kernel's output and broadcast
+    back.  The oracle keeps the plain windowed NTILE + median, proving
+    the decomposition is identical."""
     orders = load_table(spark, sf_dir, "orders")
     customer = load_table(spark, sf_dir, "customer")
     nation = load_table(spark, sf_dir, "nation")
@@ -512,57 +510,20 @@ def q_customer_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("fat")
         )
     )
-    # pin the range partitioning so the count job and the consume job
-    # see one consistent layout (boundaries are sampled per job)
-    ranged = (
-        per_cust.repartitionByRange(
-            range_parts(per_cust),
-            F.asc("n_name"),
-            F.desc("fat"),
-            F.asc("c_custkey"),
-        )
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
-    )
-    w_local = Window.partitionBy("n_name", "_pid").orderBy(
-        F.desc("fat"), F.asc("c_custkey")
-    )
-    local = ranged.withColumn("_rn", F.row_number().over(w_local))
-    counts = (
-        ranged.groupBy("n_name", "_pid")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    )
-    by_nation: dict[str, list] = {}
-    for r in sorted(counts, key=lambda r: (r["n_name"], r["_pid"])):
-        by_nation.setdefault(r["n_name"], []).append((r["_pid"], r["n"]))
-    rows = []
-    for nname, lst in by_nation.items():
-        tot, acc = sum(n for _, n in lst), 0
-        for pid, n in lst:
-            rows.append((nname, pid, acc, tot))
-            acc += n
-    off_df = spark.createDataFrame(
-        rows, "n_name string, _pid int, _offset long, _n long"
-    )
-    # NTILE(4) from the in-nation position and n: q = n DIV 4 rows per
-    # unpadded bucket, the first n%4 buckets take one row more
-    ntile4 = F.expr(
-        "CAST(IF(_pos <= (_n % 4) * ((_n DIV 4) + 1), "
-        "(_pos - 1) DIV ((_n DIV 4) + 1), "
-        "(_n % 4) + (_pos - 1 - (_n % 4) * ((_n DIV 4) + 1))"
-        " DIV GREATEST(_n DIV 4, 1)) + 1 AS INT)"
+    pos, _ = prefix_sums(
+        per_cust,
+        [F.desc("fat"), F.asc("c_custkey")],
+        {"_pos": F.lit(1)},
+        by=["n_name"],
     )
     # exact median in integer cents, then one explicit half-up rounding:
     # rounding a median of doubles ties differently across engines
     cents = F.round(F.col("fat") * 100).cast("bigint")
-    med = ranged.groupBy("n_name").agg(
+    med = pos.groupBy("n_name").agg(
         (F.floor(F.median(cents) + 0.5) / 100).alias("mediana_nacao")
     )
     return (
-        local.join(F.broadcast(off_df), ["n_name", "_pid"])
-        .withColumn("_pos", F.col("_offset") + F.col("_rn"))
-        .withColumn("quartil", ntile4)
+        pos.withColumn("quartil", ntile(F.col("_pos"), F.col("_pos_total"), 4))
         .join(F.broadcast(med), "n_name")
         .select("n_name", "c_custkey", "fat", "quartil", "mediana_nacao")
     )
@@ -592,17 +553,9 @@ def q_pareto_abc(spark: SparkSession, sf_dir: str) -> DataFrame:
     repo's reference pattern for a GLOBAL cumulative sum at scale.
 
     A naive ``SUM() OVER (ORDER BY revenue)`` funnels the whole
-    relation through ONE task.  Here the cumsum is two-phase:
-
-    1. range-repartition by the global order (revenue desc, partkey),
-       pinned with localCheckpoint so both consumers see one
-       consistent partitioning;
-    2. per-partition local cumsum (window keyed by the partition id —
-       parallel across partitions);
-    3. per-partition totals (a range_parts-row aggregate — bounded
-       metadata) become exclusive offsets via a driver-side scan of
-       that tiny list, broadcast-joined back: global cum = offset +
-       local cum.
+    relation through ONE task; here the cumsum over (revenue desc,
+    partkey) and the grand total come from the two-phase
+    ``prefix_sums`` kernel.
 
     Class boundaries compare EXACT INTEGER cents (cum*100 <= total*80)
     — no float share crosses an engine boundary; the reported share
@@ -615,32 +568,10 @@ def q_pareto_abc(spark: SparkSession, sf_dir: str) -> DataFrame:
     rev = li.groupBy("l_partkey").agg(
         F.sum(cents(F.col("l_extendedprice"))).alias("rev_c")
     )
-    ranged = rev.repartitionByRange(
-        range_parts(rev), F.desc("rev_c"), F.asc("l_partkey")
-    ).withColumn("pid", F.spark_partition_id())
-    ranged = ranged.localCheckpoint(eager=True)
-
-    w_local = Window.partitionBy("pid").orderBy(
-        F.desc("rev_c"), F.asc("l_partkey")
-    ).rowsBetween(Window.unboundedPreceding, 0)
-    local = ranged.withColumn("cum_local", F.sum("rev_c").over(w_local))
-
-    totals = (
-        ranged.groupBy("pid").agg(F.sum("rev_c").alias("ptot")).collect()
+    cum, totals = prefix_sums(
+        rev, [F.desc("rev_c"), F.asc("l_partkey")], {"cum_c": F.col("rev_c")}
     )
-    totals.sort(key=lambda r: r.pid)
-    offsets, acc = [], 0
-    for r in totals:
-        offsets.append((r.pid, acc))
-        acc += r.ptot
-    grand = acc
-    off_df = spark.createDataFrame(offsets, "pid int, offset long")
-
-    cum = local.join(F.broadcast(off_df), "pid").select(
-        "l_partkey",
-        "rev_c",
-        (F.col("cum_local") + F.col("offset")).alias("cum_c"),
-    )
+    grand = totals[()]["cum_c"]
     abc = (
         F.when(F.col("cum_c") * 100 <= F.lit(grand) * 80, F.lit("A"))
         .when(F.col("cum_c") * 100 <= F.lit(grand) * 95, F.lit("B"))

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.prefix import prefix_sums
 from ..sources.tables import load_table, spread
 from .dedup import _norm_text, hash60, sql_hash60
 
@@ -890,7 +891,6 @@ FROM agg
 
 
 SHUF_SALT = "epoch0"
-SHUF_PARTS = 16  # range partitions for the two-phase global row_number
 
 
 def q_training_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -902,14 +902,10 @@ def q_training_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-agnostic, repartition-stable, and re-keyable per epoch by
     changing the salt.
 
-    Scale shape (the pareto_abc two-phase pattern — a global
-    ROW_NUMBER without a single-task sort): range-repartition on the
-    shuffle key (pinned with localCheckpoint so both consumers see one
-    consistent partitioning), per-partition local row_number in
-    parallel, then per-partition counts (a SHUF_PARTS-row driver list)
-    become broadcast offsets: global_pos = offset + local position.
-    The oracle restates the plain global window, proving the
-    decomposition computes the identical permutation."""
+    Scale shape: the global position is ``prefix_sums``' 1-based
+    position over (skey, doc_id) — a global ROW_NUMBER without a
+    single-task sort.  The oracle restates the plain global window,
+    proving the decomposition computes the identical permutation."""
     docs = spread(load_table(spark, sf_dir, "documents"), "doc_id")
     keyed = docs.select(
         "doc_id",
@@ -917,31 +913,10 @@ def q_training_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.concat(F.lit(SHUF_SALT + "|"), F.col("doc_id").cast("string"))
         ).alias("skey"),
     )
-    ranged = keyed.repartitionByRange(
-        SHUF_PARTS, F.asc("skey"), F.asc("doc_id")
-    ).withColumn("pid", F.spark_partition_id())
-    ranged = ranged.localCheckpoint(eager=True)
-
-    from pyspark.sql import Window
-
-    w_local = Window.partitionBy("pid").orderBy(
-        F.asc("skey"), F.asc("doc_id")
+    pos, _ = prefix_sums(
+        keyed, [F.asc("skey"), F.asc("doc_id")], {"pos": F.lit(1)}
     )
-    local = ranged.withColumn("rn", F.row_number().over(w_local))
-
-    counts = ranged.groupBy("pid").agg(F.count(F.lit(1)).alias("n")).collect()
-    counts.sort(key=lambda r: r.pid)
-    offsets, acc = [], 0
-    for r in counts:
-        offsets.append((r.pid, acc))
-        acc += r.n
-    off_df = spark.createDataFrame(offsets, "pid int, offset long")
-
-    return local.join(F.broadcast(off_df), "pid").select(
-        "doc_id",
-        "skey",
-        (F.col("offset") + F.col("rn")).alias("pos"),
-    )
+    return pos.select("doc_id", "skey", "pos")
 
 
 ORACLE_TRAINING_SHUFFLE = f"""

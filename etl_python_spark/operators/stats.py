@@ -16,7 +16,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.numeric import cents
-from ..sources.tables import load_table, range_parts
+from ..functions.prefix import prefix_sums
+from ..sources.tables import load_table
 
 LOOKBACK_US = 7 * 24 * 3600 * 1_000_000  # attribution lookback (µs)
 TOUCH_TYPES = ("click", "view")
@@ -115,15 +116,10 @@ SEGMENTS = ("AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY")
 def _segment_cdf(spark: SparkSession, sf_dir: str):
     """Shared rank machinery for the distribution tests (KS and
     Mann-Whitney): per distinct order value (exact integer cents) the
-    per-segment counts c0..c4 AND global cumulative counts cum0..cum4,
-    plus the grand totals.
-
-    The cumulative counts use the pareto_abc two-phase GLOBAL cumsum —
-    range-partition by value, per-partition local window cumsums
-    (parallel), per-partition totals to the driver (range_parts × 5
-    ints — bounded metadata), exclusive offsets broadcast back — so no data-wide
-    single-task window exists and the value stream is scanned once
-    for all downstream pair statistics."""
+    per-segment counts c0..c4 AND global cumulative counts cum0..cum4
+    (``prefix_sums`` over the value order), plus the grand totals — so
+    the value stream is scanned once for all downstream pair
+    statistics."""
     o = load_table(spark, sf_dir, "orders")
     c = load_table(spark, sf_dir, "customer")
     seg = o.join(
@@ -140,44 +136,10 @@ def _segment_cdf(spark: SparkSession, sf_dir: str):
             for i, s in enumerate(SEGMENTS)
         ]
     )
-
-    ranged = per_v.repartitionByRange(
-        range_parts(per_v), F.asc("v")
-    ).withColumn("pid", F.spark_partition_id())
-    ranged = ranged.localCheckpoint(eager=True)
-
-    w_local = Window.partitionBy("pid").orderBy(F.asc("v")).rowsBetween(
-        Window.unboundedPreceding, 0
+    cum, totals = prefix_sums(
+        per_v, [F.asc("v")], {f"cum{i}": F.col(f"c{i}") for i in range(5)}
     )
-    local = ranged.select(
-        "v",
-        "pid",
-        *[F.col(f"c{i}") for i in range(5)],
-        *[F.sum(f"c{i}").over(w_local).alias(f"l{i}") for i in range(5)],
-    )
-    totals = (
-        ranged.groupBy("pid")
-        .agg(*[F.sum(f"c{i}").alias(f"t{i}") for i in range(5)])
-        .collect()
-    )
-    totals.sort(key=lambda r: r.pid)
-    offsets, acc = [], [0] * 5
-    for r in totals:
-        offsets.append((r.pid, *acc))
-        acc = [acc[i] + r[f"t{i}"] for i in range(5)]
-    n = acc  # grand totals per segment
-    off_df = spark.createDataFrame(
-        offsets, "pid int, " + ", ".join(f"o{i} long" for i in range(5))
-    )
-    cum = local.join(F.broadcast(off_df), "pid").select(
-        "v",
-        *[F.col(f"c{i}") for i in range(5)],
-        *[
-            (F.col(f"l{i}") + F.col(f"o{i}")).alias(f"cum{i}")
-            for i in range(5)
-        ],
-    )
-    return cum, n
+    return cum, [totals[()][f"cum{i}"] for i in range(5)]
 
 
 def q_ks_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -192,10 +154,8 @@ def q_ks_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     DECIMAL(38,0); the shape is unchanged.)
 
     Scale shape: one hash aggregate to per-value segment counts (5
-    int columns over distinct values), then the pareto_abc two-phase
-    GLOBAL cumsum — range-partition by value, per-partition local
-    cumsums (parallel), per-partition totals to the driver (range_parts
-    × 5 ints — bounded metadata), exclusive offsets broadcast back.  All 10 pair
+    int columns over distinct values), then the two-phase GLOBAL
+    cumsum (`_segment_cdf`, via ``prefix_sums``).  All 10 pair
     statistics read the SAME cumulative relation via one stack/unpivot
     + a 10-group max — the value stream is scanned once, no data-wide
     single-task window, no per-pair pass.
@@ -1141,12 +1101,11 @@ def q_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the spend aggregate, the customer join, and the two
     rank join-backs are the only data-sized shuffles; ranks come from
-    per-(nation, value) COUNTS via a grouped two-phase cumulative
-    pass (the mann_whitney/_segment_cdf idea — a per-nation rank
-    window would sort a whole nation's customers in ONE task), and
-    the moment aggregate reduces each nation to one row before the
-    driver-free final projection.  denx/deny = 0 (constant column)
-    yields NULL via nullif, not a crash.
+    per-(nation, value) COUNTS via a per-nation ``prefix_sums`` (a
+    per-nation rank window would sort a whole nation's customers in
+    ONE task), and the moment aggregate reduces each nation to one
+    row before the driver-free final projection.  denx/deny = 0
+    (constant column) yields NULL via nullif, not a crash.
     """
     o = load_table(spark, sf_dir, "orders")
     c = load_table(spark, sf_dir, "customer")
@@ -1170,43 +1129,16 @@ def q_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
         """Per-(nation, value) DOUBLED average rank from counts alone:
         with less = #rows strictly below v and eq = #rows at v inside
         the nation, 2*rank_min + ties - 1 == 2*less + eq + 1.  The
-        cumulative `less` is a grouped two-phase pass — range
-        partition on (nation, value), parallel local cumsum,
-        per-(nation, partition) sums (a bounded driver list) become
-        broadcast offsets — so no task ever sorts a whole nation."""
+        cumulative count is a per-nation ``prefix_sums``, so no task
+        ever sorts a whole nation."""
         cnt = base.groupBy("n_name", col).agg(
             F.count(F.lit(1)).alias("_c")
         )
-        ranged = (
-            cnt.repartitionByRange(range_parts(cnt), F.asc("n_name"), F.asc(col))
-            .withColumn("_pid", F.spark_partition_id())
-            .localCheckpoint(eager=True)
+        cum, _ = prefix_sums(
+            cnt, [F.asc(col)], {"_cum": F.col("_c")}, by=["n_name"]
         )
-        w_cum = (
-            Window.partitionBy("n_name", "_pid")
-            .orderBy(col)
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        local = ranged.withColumn("_cum", F.sum("_c").over(w_cum))
-        sums = (
-            ranged.groupBy("n_name", "_pid")
-            .agg(F.sum("_c").alias("_s"))
-            .collect()
-        )
-        by_nat: dict[str, list] = {}
-        for r in sorted(sums, key=lambda r: (r["n_name"], r["_pid"])):
-            by_nat.setdefault(r["n_name"], []).append((r["_pid"], r["_s"]))
-        offs = []
-        for nname, lst in by_nat.items():
-            acc = 0
-            for pid, s in lst:
-                offs.append((nname, pid, acc))
-                acc += s
-        off_df = spark.createDataFrame(
-            offs, "n_name string, _pid int, _offset long"
-        )
-        less = F.col("_offset") + F.col("_cum") - F.col("_c")
-        return local.join(F.broadcast(off_df), ["n_name", "_pid"]).select(
+        less = F.col("_cum") - F.col("_c")
+        return cum.select(
             "n_name",
             col,
             (F.lit(2) * less + F.col("_c") + F.lit(1))
@@ -1510,11 +1442,9 @@ def q_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer micro-units.
 
     Scale shape: one data-sized aggregate to per-customer spend, then
-    a two-phase per-segment rank (range-repartition on
-    (segment, spend), parallel local row_number, broadcast
-    per-segment offsets — a per-segment window would sort a whole
-    segment's customers in ONE task), one moment aggregate per
-    segment.  The two-phase positions are a valid ascending
+    per-segment positions from ``prefix_sums`` (a per-segment window
+    would sort a whole segment's customers in ONE task), one moment
+    aggregate per segment.  The positions are a valid ascending
     enumeration (tied blocks still occupy consecutive positions, and
     W is tie-order invariant), so the statistic is bit-identical.
     """
@@ -1526,37 +1456,16 @@ def q_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = c.join(spend, c["c_custkey"] == spend["o_custkey"]).select(
         "c_mktsegment", "spend_c"
     )
-    ranged = (
-        base.repartitionByRange(
-            range_parts(base), F.asc("c_mktsegment"), F.asc("spend_c")
-        )
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
+    pos, _ = prefix_sums(
+        base, [F.asc("spend_c")], {"_pos": F.lit(1)}, by=["c_mktsegment"]
     )
-    w_local = Window.partitionBy("c_mktsegment", "_pid").orderBy("spend_c")
-    counts = (
-        ranged.groupBy("c_mktsegment", "_pid")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .collect()
-    )
-    by_seg: dict[str, list] = {}
-    for r in sorted(counts, key=lambda r: (r["c_mktsegment"], r["_pid"])):
-        by_seg.setdefault(r["c_mktsegment"], []).append((r["_pid"], r["cnt"]))
-    offs = []
-    for seg, lst in by_seg.items():
-        acc = 0
-        for pid, cnt in lst:
-            offs.append((seg, pid, acc))
-            acc += cnt
-    off_df = spark.createDataFrame(
-        offs, "c_mktsegment string, _pid int, _offset long"
-    )
-    i = F.col("_offset") + F.row_number().over(w_local)
-    ranked = ranged.join(F.broadcast(off_df), ["c_mktsegment", "_pid"]).select(
+    ranked = pos.select(
         "c_mktsegment",
         "spend_c",
-        (i.cast("decimal(38,0)") * F.col("spend_c").cast("decimal(38,0)"))
-        .alias("iw"),
+        (
+            F.col("_pos").cast("decimal(38,0)")
+            * F.col("spend_c").cast("decimal(38,0)")
+        ).alias("iw"),
     )
     agg = ranked.groupBy("c_mktsegment").agg(
         F.count(F.lit(1)).alias("n"),
@@ -1814,8 +1723,8 @@ def q_auc_roc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one hash aggregate to the distinct-score relation
     (bounded by score cardinality, not corpus size), then the
-    two-phase global cumsum (range partition + local window +
-    broadcast offsets — no single-task sort), then a scalar fold.
+    two-phase global cumsum of negatives (``prefix_sums`` — no
+    single-task sort), then a scalar fold.
     """
     docs = load_table(spark, sf_dir, "documents")
     per_v = (
@@ -1829,33 +1738,12 @@ def q_auc_roc(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(1 - F.col("pos")).alias("g"),
         )
     )
-    ranged = per_v.repartitionByRange(
-        range_parts(per_v), F.asc("v")
-    ).withColumn("pid", F.spark_partition_id())
-    ranged = ranged.localCheckpoint(eager=True)
-    w_local = Window.partitionBy("pid").orderBy(F.asc("v")).rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    local = ranged.select(
-        "v", "pid", "p", "g", F.sum("g").over(w_local).alias("lg")
-    )
-    totals = ranged.groupBy("pid").agg(F.sum("g").alias("tg")).collect()
-    totals.sort(key=lambda r: r.pid)
-    offsets, acc = [], 0
-    for r in totals:
-        offsets.append((r.pid, acc))
-        acc += r.tg
-    off_df = spark.createDataFrame(offsets, "pid int, og long")
-    hits2 = F.col("p") * (
-        2 * (F.col("lg") + F.col("og") - F.col("g")) + F.col("g")
-    )
-    agg = (
-        local.join(F.broadcast(off_df), "pid")
-        .agg(
-            F.sum("p").alias("n_pos"),
-            F.sum("g").alias("n_neg"),
-            F.sum(hits2).alias("hits2"),
-        )
+    cum, _ = prefix_sums(per_v, [F.asc("v")], {"cg": F.col("g")})
+    hits2 = F.col("p") * (2 * (F.col("cg") - F.col("g")) + F.col("g"))
+    agg = cum.agg(
+        F.sum("p").alias("n_pos"),
+        F.sum("g").alias("n_neg"),
+        F.sum(hits2).alias("hits2"),
     )
     auc = F.when(
         (F.col("n_pos") > 0) & (F.col("n_neg") > 0),

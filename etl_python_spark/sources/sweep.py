@@ -25,8 +25,10 @@ from __future__ import annotations
 
 import unicodedata
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..functions.prefix import prefix_sums
 
 # the reference's synonym dictionary, abridged to the high-signal
 # entries per category (ref :23-28; extend per deployment)
@@ -162,22 +164,13 @@ def _canonicalize(
     out: DataFrame,
     lineage_col: str,
     extra_cols: tuple[str, ...] = (),
-    distributed: bool = False,
 ) -> DataFrame:
     """The reference's consolidation cleanup, shared by the driver and
     distributed paths: SKU drops the Excel-float '.0' tail and
     uppercases; QTDE coerces to numeric with 0 fill; empty SKUs drop;
     missing optional categories take their defaults; 1-based id over
-    the (deposito, sku) ordering.
-
-    Id assignment has two shapes (ADVICE r7, sweep.py:191): the
-    default global ``Window.orderBy`` funnels everything through ONE
-    task — fine for the per-file driver path whose output is one
-    workbook's rows, wrong for a landing zone.  ``distributed=True``
-    switches to the two-pass scheme (range-partition on the sort key,
-    number within partitions, add per-partition count offsets — a
-    #partitions-sized driver collect), which yields the same 1-based
-    global ordering with full parallelism."""
+    the (deposito, sku) ordering — the position from ``prefix_sums``,
+    so a landing zone's ids never funnel through one task."""
     sku = F.upper(F.trim(F.regexp_replace(F.col("sku"), r"\.0$", "")))
     out = (
         out.select(
@@ -203,38 +196,8 @@ def _canonicalize(
     final_cols = ["sku", "descricao", "deposito", "qtde", lineage_col,
                   *extra_cols]
     sort_cols = ["deposito", "sku", lineage_col, *extra_cols]
-    if not distributed:
-        w = Window.orderBy(*sort_cols)
-        return out.select(
-            F.row_number().over(w).alias("id"), *final_cols
-        )
-    # distributed 1-based global id: range-partition by the sort key
-    # (partition i's keys precede partition i+1's), row_number within
-    # each partition, then shift by the sum of the preceding
-    # partitions' counts.  The offset table is #partitions rows —
-    # metadata-scale — so its global window and the broadcast join
-    # back are free; the data itself never funnels through one task,
-    # and the whole thing stays lazy (the range exchange is shared by
-    # both branches via reuse).
-    ranged = out.repartitionByRange(*sort_cols).withColumn(
-        "_pid", F.spark_partition_id()
-    )
-    wp = Window.partitionBy("_pid").orderBy(*sort_cols)
-    numbered = ranged.withColumn("_rn", F.row_number().over(wp))
-    wo = Window.orderBy("_pid").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offsets = (
-        ranged.groupBy("_pid")
-        .agg(F.count(F.lit(1)).alias("_c"))
-        .select(
-            "_pid",
-            F.coalesce(F.sum("_c").over(wo), F.lit(0)).alias("_off"),
-        )
-    )
-    return numbered.join(F.broadcast(offsets), "_pid").select(
-        (F.col("_rn") + F.col("_off")).cast("int").alias("id"), *final_cols
-    )
+    ids, _ = prefix_sums(out, sort_cols, {"_pos": F.lit(1)})
+    return ids.select(F.col("_pos").cast("int").alias("id"), *final_cols)
 
 
 def sweep_workbooks_distributed(
@@ -311,6 +274,4 @@ def sweep_workbooks_distributed(
         "sku string, descricao string, deposito string, qtde string, "
         f"{lineage_col} string, {file_col} string",
     )
-    return _canonicalize(
-        raw, lineage_col, extra_cols=(file_col,), distributed=True
-    )
+    return _canonicalize(raw, lineage_col, extra_cols=(file_col,))

@@ -126,19 +126,6 @@ def spread(df: DataFrame, *cols: str) -> DataFrame:
     return df.repartition(n)
 
 
-def range_parts(df: DataFrame, hi: int = 1024) -> int:
-    """Partition count for the two-phase range-rank/NTILE/cumsum
-    kernels (r16 verdict item 5: a constant 8/16 tuned at sf0.1 is a
-    fixed parallelism bound at 100 TB).  Tracks the session's core
-    count (``defaultParallelism`` — ``SPARK_GRAFT_CPUS`` locally, the
-    cluster's total cores at scale) with a floor of 8 so the kernels
-    stay parallel on tiny sessions and a cap that bounds the
-    per-partition count rows the kernels collect/broadcast (bounded
-    metadata, not data; the closed-form offsets make the result
-    partition-count-independent by construction)."""
-    return max(8, min(hi, df.sparkSession.sparkContext.defaultParallelism))
-
-
 def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> tuple[DataFrame, ...]:
     return tuple(load_table(spark, sf_dir, n) for n in (names or TABLES))
 

@@ -363,28 +363,40 @@ def test_markov_attribution_hand_computed(spark, tmp_path):
 # rfm: two-phase global NTILE equals the single-window NTILE
 # ---------------------------------------------------------------------------
 
-@pytest.mark.parametrize("n", [1, 4, 5, 23, 100, 101])
-def test_ntile_two_phase_matches_window_ntile(spark, n):
+_NTILE_NS = [1, 4, 5, 23, 100, 101]
+
+
+@pytest.mark.parametrize(
+    "k, n",
+    [pytest.param(5, n, id=str(n)) for n in _NTILE_NS]
+    + [pytest.param(4, n, id=f"k4-{n}") for n in _NTILE_NS],
+)
+def test_ntile_two_phase_matches_window_ntile(spark, k, n):
     """The closed-form bucket of (global position, n) must reproduce
-    NTILE(5) exactly for every n mod 5 shape — including n < 5 (every
-    row its own bucket) and the padded/unpadded boundary rows."""
+    NTILE(k) exactly for every n mod k shape — including n < k (every
+    row its own bucket) and the padded/unpadded boundary rows — with n
+    as a driver literal (rfm_segments) and as the kernel's total
+    column (customer_quartiles)."""
     from pyspark.sql import Window
 
-    from etl_python_spark.operators.affinity import _ntile5_two_phase
+    from etl_python_spark.functions.prefix import ntile, prefix_sums
 
     # keys chosen so the range order differs from insertion order and
     # ties on the metric are broken by the id column
     rows = [(i, (i * 7) % 13) for i in range(n)]
     df = spark.createDataFrame(rows, "id long, metric long")
     order = [F.desc("metric"), F.asc("id")]
-    got = {
-        r.id: r.nt
-        for r in _ntile5_two_phase(df, order, "nt").collect()
-    }
+    pos, totals = prefix_sums(df, order, {"_pos": F.lit(1)})
+    got = pos.select(
+        "id",
+        ntile(F.col("_pos"), F.lit(totals[()]["_pos"]), k).alias("lit"),
+        ntile(F.col("_pos"), F.col("_pos_total"), k).alias("col"),
+    ).collect()
     want = {
         r.id: r.nt
         for r in df.select(
-            "id", F.ntile(5).over(Window.orderBy(*order)).alias("nt")
+            "id", F.ntile(k).over(Window.orderBy(*order)).alias("nt")
         ).collect()
     }
-    assert got == want
+    assert {r.id: r.lit for r in got} == want
+    assert {r.id: r.col for r in got} == want

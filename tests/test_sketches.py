@@ -412,9 +412,10 @@ def test_pareto_abc_two_phase_equals_global_cumsum(spark):
         seen_classes.append(r.abc_class)
     assert seen_classes == sorted(seen_classes)   # A <= B <= C monotone
     assert seen_classes[0] == "A" and seen_classes[-1] == "C"
-    # the range partitioning genuinely spreads the relation
-    from etl_python_spark.sources.tables import load_table, range_parts
+    # the kernel's range partitioning genuinely spreads the relation
+    from etl_python_spark.sources.tables import load_table
     from etl_python_spark.functions.numeric import cents
+    from etl_python_spark.functions.prefix import prefix_sums
     from pyspark.sql import functions as F
 
     rev = (
@@ -422,10 +423,10 @@ def test_pareto_abc_two_phase_equals_global_cumsum(spark):
         .groupBy("l_partkey")
         .agg(F.sum(cents(F.col("l_extendedprice"))).alias("rev_c"))
     )
-    rev = rev.repartitionByRange(
-        range_parts(rev), F.desc("rev_c"), F.asc("l_partkey")
-    ).withColumn("pid", F.spark_partition_id())
-    assert rev.select("pid").distinct().count() > 1
+    cum, _ = prefix_sums(
+        rev, [F.desc("rev_c"), F.asc("l_partkey")], {"cum_c": F.col("rev_c")}
+    )
+    assert cum.select("_pid").distinct().count() > 1
 
 
 def test_temperature_mix_invariants(spark):

@@ -93,11 +93,24 @@ def test_sweep_workbook_no_qualifying_sheet_raises(spark, tmp_path):
         sweep_workbook(spark, p)
 
 
-def test_sweep_workbooks_distributed_matches_per_file(spark, tmp_path):
+def test_sweep_workbooks_distributed_matches_per_file(spark, tmp_path, monkeypatch):
     """Landing-zone sweep: mapInPandas discovery matches the per-file
     driver path row-for-row (ids aside, which renumber over the
     consolidated ordering), with workbook lineage added."""
+    from etl_python_spark.sources import sweep
     from etl_python_spark.sources.sweep import sweep_workbooks_distributed
+
+    # the id kernel pins its input with a checkpoint, so the result's
+    # own plan starts at that checkpoint: read the discovery's plan off
+    # the relation the kernel numbers
+    plans = []
+    real = sweep.prefix_sums
+
+    def spy(df, *args, **kwargs):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return real(df, *args, **kwargs)
+
+    monkeypatch.setattr(sweep, "prefix_sums", spy)
 
     land = tmp_path / "zone"
     land.mkdir()
@@ -113,7 +126,7 @@ def test_sweep_workbooks_distributed_matches_per_file(spark, tmp_path):
         {"CD-B": (["EAN", "Saldo", "Armazém"], [["B9", "2", "G1"]])},
     )
     dist = sweep_workbooks_distributed(spark, str(land))
-    plan = dist._jdf.queryExecution().executedPlan().toString()
+    [plan] = plans
     assert "MapInPandas" in plan
 
     got = sorted(
@@ -154,13 +167,15 @@ def test_distributed_sweep_ids_are_global_ordering_without_single_task(spark, tm
     keys = [(r.deposito, r.sku, r.origem_aba, r.arquivo_origem)
             for r in ordered]
     assert keys == sorted(keys)  # id follows the consolidated ordering
-    # the data itself is never globally windowed: every data-wide
-    # window in the plan partitions by _pid (the offset table's global
-    # window runs over #partitions rows, not data)
+    # the data itself is never globally windowed: the plan numbers the
+    # rows with at least one data-wide window, and every window in it
+    # partitions by the range partition id _pid
     plan = out and sweep_workbooks_distributed(
         spark, str(land)
     )._jdf.queryExecution().optimizedPlan().toString()
     import re
 
-    for m in re.finditer(r"row_number\(\).*?windowspecdefinition\(([^)]*)\)", plan):
-        assert "_pid" in m.group(1), plan[:2000]
+    specs = re.findall(r"windowspecdefinition\(([^,)]*)", plan)
+    assert specs, plan[:2000]
+    for spec in specs:
+        assert spec.startswith("_pid#"), plan[:2000]
